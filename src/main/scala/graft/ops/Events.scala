@@ -1239,15 +1239,13 @@ object Events {
   private def runStream(s: SparkSession, df: DataFrame, prefix: String,
                         mode: String): DataFrame = {
     val name = s"${prefix}_${streamRuns.incrementAndGet()}"
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = df.writeStream.format("memory").queryName(name)
+    SmallData.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+      df.writeStream.format("memory").queryName(name)
         .outputMode(mode)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        .awaitTermination()
+    }
     s.table(name)
   }
 
@@ -1619,6 +1617,14 @@ object Events {
       .orderBy($"user_id")
   }
 
+  /** Run `body` with the RocksDB state-store provider pinned (the only
+    * provider implementing transformWithState's state encoding),
+    * restoring the previous provider after. */
+  private def withRocksDb[T](s: SparkSession)(body: => T): T =
+    SmallData.withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    )(body)
+
   /** Oracle-gated run of the `transformWithState` CDC processor
     * ([[graft.streaming.EventStream.latestPerKeyTws]]) — Spark 4's
     * arbitrary-stateful-processing API through the same DuckDB gate as
@@ -1626,21 +1632,6 @@ object Events {
     * order, identical oracle. The RocksDB state-store provider is
     * pinned for the query (the only provider implementing the new
     * API's state encoding) and restored after. */
-  /** Run `body` with the RocksDB state-store provider pinned (the only
-    * provider implementing transformWithState's state encoding),
-    * restoring the previous provider after. */
-  private def withRocksDb[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
-    }
-  }
-
   private def streamCdcTws(s: SparkSession, d: String) = {
     import s.implicits._
     val sink = withRocksDb(s) {
@@ -1702,18 +1693,14 @@ object Events {
     // ProcessingTime time mode (required by TTL) re-triggers no-data
     // batches forever under AvailableNow — disable them for the drain;
     // an always-on deployment keeps them (they fire TTL eviction)
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val ndPrev = s.conf.getOption(ndKey)
-    s.conf.set(ndKey, "false")
-    val sink =
-      try withRocksDb(s) {
+    val sink = SmallData.withConf(s,
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
+      withRocksDb(s) {
         runStream(s, graft.streaming.EventStream.firstSeenTtl(
             streamingEvents(s, d).as[graft.streaming.EventStream.Event]).toDF(),
           "graft_stream_first_seen", "append")
-      } finally ndPrev match {
-        case Some(v) => s.conf.set(ndKey, v)
-        case None    => s.conf.unset(ndKey)
       }
+    }
     sink.select($"_1".as("user_id"), $"_2".as("event_type"),
         $"_3".as("first_ts"), $"_4".as("first_event_id"),
         $"_5".as("first_value"))

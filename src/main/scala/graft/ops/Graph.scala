@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 import graft.Tables
 import graft.functions.Exact._
 import graft.functions.TextFns.{hash60, hash60Sql}
+import SmallData.finalCheckpoint
 
 /** [EXT] Iterative graph scoring — the Pregel-shaped family beyond the
   * connected components in [[Dedup]] (`dedup_clusters`). PageRank over
@@ -39,23 +40,9 @@ object Graph {
     * co-order graph). Every node in the graph has outdeg ≥ 1 by
     * construction, so no dangling-mass handling is needed — and the
     * oracle needs none either. */
-  private[graft] def coOrderEdges(s: SparkSession, d: String): DataFrame =
-    coOrderEdgesOf(s, d, oldOnly = false)
-
-  /** [[coOrderEdges]] with an optional deterministic "yesterday" cut:
-    * `oldOnly = true` drops the ~10% of ORDERS whose
-    * `hash60("inc:" || o_orderkey) % 10 = 0` — the same increment
-    * convention the dedup family uses on doc ids — BEFORE the distinct
-    * pair projection, so the old edge set is exactly what a store
-    * built before today's order batch would contain. */
-  private def coOrderEdgesOf(s: SparkSession, d: String,
-                             oldOnly: Boolean): DataFrame = {
+  private[graft] def coOrderEdges(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ord = Tables.orders(s, d).select($"o_orderkey", $"o_custkey")
-    val base = if (oldOnly)
-      ord.filter(hash60(concat(lit("inc:"), $"o_orderkey")) % 10 =!= 0)
-    else ord
-    val co = base
+    val co = Tables.orders(s, d).select($"o_orderkey", $"o_custkey")
       .join(Tables.lineitem(s, d).select($"l_orderkey", $"l_suppkey"),
         $"o_orderkey" === $"l_orderkey")
       .select($"o_custkey".as("cust"), $"l_suppkey".as("supp"))
@@ -299,22 +286,15 @@ object Graph {
     // folds and the loop runs with edge-scaled partitions, AQE off
     // (its per-exchange stage jobs were 12.2 s of the 13.7 s warm
     // run, 95 broadcast-thread stages for a 16-round loop)
-    val m = edges.count()
-    val nPart = math.max(8L, math.min(
-      s.sparkContext.defaultParallelism.toLong, m / 200000L)).toInt
-    def bc(df: DataFrame): DataFrame =
-      if (m < 20000000L) broadcast(df) else df
-    withConf(s, (if (m < 20000000L)
-      Seq("spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.shuffle.partitions" -> nPart.toString)
-     else Seq.empty): _*) {
+    val g = SmallData.graph(s, edges.count())
+    g.withConfs {
     val deg = edges.groupBy($"src").agg(count(lit(1)).as("outdeg"))
     // The within-partition sort only pays above the gate, where the
     // per-round join is a sort-merge over the cached src runs; below
     // it the rank side rides an explicit broadcast hash join, which
     // never reads sorted runs — skip the sort there (round-18).
     val wired0 = edges.join(deg, "src").repartition($"src")
-    val wired = (if (m < 20000000L) wired0
+    val wired = (if (g.small) wired0
       else wired0.sortWithinPartitions($"src")).cache()
     // One scalar job up front (the honest control-flow pattern): as a
     // broadcast 1-row frame the node count would re-derive its whole
@@ -347,7 +327,7 @@ object Graph {
       // per round instead of twice (round-18: the projected `prev`
       // build side was a second, distinct broadcast job every round —
       // 40 broadcast stages, 4.2 s of the incremental op's 13.6).
-      val rb = bc(ranks)
+      val rb = g.bc(ranks)
       val next = wired.join(rb.as("r1"), $"src" === $"r1.node")
         .select($"dst", roundHalfUp($"r1.pr" / $"outdeg", 12).as("c"))
         .groupBy($"dst")
@@ -375,7 +355,7 @@ object Graph {
     // (repeated calls in a long-lived session must not accumulate
     // cached blocks; the incremental op calls this twice per run)
     wired.unpersist(false)
-    (finalCheckpoint(s, ranks), round)
+    (finalCheckpoint(ranks), round)
     }
   }
 
@@ -743,15 +723,8 @@ object Graph {
   private[graft] def ccLabels(s: SparkSession, edges: DataFrame)
       : DataFrame = {
     import s.implicits._
-    val m = edges.count()
-    val nPart = math.max(8L, math.min(
-      s.sparkContext.defaultParallelism.toLong, m / 200000L)).toInt
-    def bc(df: DataFrame): DataFrame =
-      if (m < 20000000L) broadcast(df) else df
-    withConf(s, (if (m < 20000000L)
-      Seq("spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.shuffle.partitions" -> nPart.toString)
-     else Seq.empty): _*) {
+    val g = SmallData.graph(s, edges.count())
+    g.withConfs {
     val nodes = edges.select($"src".as("node")).distinct()
     val closed = edges
       .unionByName(nodes.select($"node".as("src"), $"node".as("dst")))
@@ -759,11 +732,11 @@ object Graph {
       .cache()
     var labels = nodes.select($"node", $"node".as("label"))
     for (_ <- 1 to CcRounds) {
-      labels = closed.join(bc(labels), $"dst" === $"node")
+      labels = closed.join(g.bc(labels), $"dst" === $"node")
         .groupBy($"src").agg(min($"label").as("label"))
         .withColumnRenamed("src", "node")
     }
-    val out = finalCheckpoint(s, labels)
+    val out = finalCheckpoint(labels)
     closed.unpersist(false)
     out
     }
@@ -981,9 +954,7 @@ object Graph {
     // and the deg/best frames chain off stats-free plans, so the
     // static planner would sort-merge the |E|-row candidate stream
     // against them per attach.
-    val m0 = edges.count()
-    def bc(df: DataFrame): DataFrame =
-      if (m0 < 20000000L) broadcast(df) else df
+    val bc = SmallData.graph(s, edges.count()).bc _
     val mTot = edges.agg(count(lit(1)).as("m"))
     val deg = edges.groupBy($"src").agg(count(lit(1)).as("k"))
       .withColumnRenamed("src", "node").cache()
@@ -1042,17 +1013,9 @@ object Graph {
     // the |E|-row folds against it (measured: 20.1 s of the step2
     // warm run sat in those broadcast/shuffle stages). Above the
     // gate nothing changes.
-    val m0 = edges.count()
-    val nPart = math.max(8L, math.min(
-      s.sparkContext.defaultParallelism.toLong, m0 / 200000L)).toInt
-    withConf(s, (Seq(
-      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "true") ++
-      (if (m0 < 20000000L)
-        Seq("spark.sql.codegen.wholeStage" -> "false",
-          "spark.sql.shuffle.partitions" -> nPart.toString)
-       else Seq.empty)): _*) {
-    def bc(df: DataFrame): DataFrame =
-      if (m0 < 20000000L) broadcast(df) else df
+    val g = SmallData.louvain(s, edges.count())
+    g.withConfs {
+    val bc = g.bc _
     val mTot = edges.agg(count(lit(1)).as("m"))
     val deg = edges.groupBy($"src").agg(count(lit(1)).as("k"))
       .withColumnRenamed("src", "node").cache()
@@ -1295,8 +1258,7 @@ object Graph {
     // graph gate (cached/staged leaves carry no size stats, so the
     // static planner would sort-merge the edge fold per attach); the
     // co-partitioned shuffle shape stands above it.
-    def bc(df: DataFrame): DataFrame =
-      if (m < 20000000L) broadcast(df) else df
+    val bc = SmallData.louvain(s, m).bc _
     // deg broadcast for the same reason: base is a staged leaf, so
     // this |V|⋈|V| attach would sort-merge inside the fold's
     // broadcast threads every round
@@ -1341,6 +1303,16 @@ object Graph {
       .select($"a", $"x.*")
   }
 
+  /** Everything a louvain op needs from one multi-level run: the
+    * composed per-original-node labels (lazy), per-level Q and move
+    * counts, the CACHED level-1 wedge/degree frames (so the output
+    * stats tail never re-folds the raw edge list), the edge total,
+    * the run's small-data gate, and the cleanup thunk. */
+  private[graft] final case class LouvainRun(
+      labels: DataFrame, qLevels: Seq[Double], moves: Seq[Long],
+      wedges1: DataFrame, deg1: DataFrame, m: Long,
+      gate: SmallData.Gate, cleanup: () => Unit)
+
   /** The full multi-level loop as a spec-drivable hook: returns the
     * composed per-ORIGINAL-node labels (LAZY — the caller's output
     * action materializes it from the filled caches), the per-level Q
@@ -1370,66 +1342,6 @@ object Graph {
     * from an existing partition — e.g. the persisted phase-1 label
     * store — instead of singletons; its init rows then fold ib₀/sb₀
     * over the base labels (two extra keyed folds, same stats job). */
-  /** Run `f` under temporary SQL conf overrides, restoring after.
-    * Callers must materialize their output INSIDE the wrapper. */
-  private def withConf[T](s: SparkSession, kvs: (String, String)*)(f: => T)
-      : T = {
-    val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
-    kvs.foreach { case (k, v) => s.conf.set(k, v) }
-    try f finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
-
-  /** Materialize a loop's RETURNED frame as a localCheckpoint with
-    * AQE re-enabled for that one terminal query: a checkpoint taken
-    * under a static (AQE-off) plan captures the plan's output
-    * ordering/partitioning attributes, and a consumer that caches the
-    * result and references it twice (a self-join) crashes
-    * InMemoryRelation's output rebinding ("key not found: ..."). An
-    * adaptive capture records no static metadata — the shape every op
-    * returned before the small-graph AQE gate. One extra tiny job on
-    * a |V|-row frame. */
-  private def finalCheckpoint(s: SparkSession, df: DataFrame): DataFrame =
-    withConf(s, "spark.sql.adaptive.enabled" -> "true") {
-      df.localCheckpoint()
-    }
-
-  /** Cut the logical lineage WITHOUT running a job:
-    * `localCheckpoint(eager = false)` rewrites the frame to a
-    * [[org.apache.spark.sql.execution.LogicalRDD]] leaf at creation
-    * time (materialization happens at the first consuming action, so
-    * the 3-job design keeps its job count). Without this, the chained
-    * multi-level plan re-expands its shared subtrees exponentially
-    * during Catalyst transforms — the driver OOM'd ANALYZING the
-    * 6-round chain before a single task ran. Unlike a plain
-    * `.cache()`, the leaf also survives the harness's
-    * `clearCache()`-between-queries convention. */
-  private def stage(df: DataFrame): DataFrame =
-    df.localCheckpoint(eager = false)
-
-  /** Free a [[stage]]d frame's checkpoint blocks (the ADVICE-item
-    * leak: abandoned per-round label checkpoints used to linger until
-    * GC-driven cleanup). Callers must have materialized everything
-    * they return first — a truncated frame cannot recompute. */
-  private def unstage(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(false)
-      case _ => ()
-    }
-
-  /** Everything a louvain op needs from one multi-level run: the
-    * composed per-original-node labels (lazy), per-level Q and move
-    * counts, the CACHED level-1 wedge/degree frames (so the output
-    * stats tail never re-folds the raw edge list), the edge total,
-    * and the cleanup thunk. */
-  private[graft] final case class LouvainRun(
-      labels: DataFrame, qLevels: Seq[Double], moves: Seq[Long],
-      wedges1: DataFrame, deg1: DataFrame, m: Long,
-      confs: Seq[(String, String)], cleanup: () => Unit)
-
   private[graft] def louvainMultiLevel(s: SparkSession, edges0: DataFrame,
       level1Base: Option[DataFrame] = None)
       : (DataFrame, Seq[Double], Seq[Long], () => Unit) = {
@@ -1481,30 +1393,14 @@ object Graph {
       println(f"    [louv] $tag%-28s ${(t1 - traceT0) / 1e9}%7.3f s")
       traceT0 = t1
     }
-    val nPart = math.max(8L, math.min(
-      s.sparkContext.defaultParallelism.toLong, m / 200000L)).toInt
+    val nPart = SmallData.graphPartitions(s, m)
     def nPartAt(level: Int): Int = math.max(4, nPart >> (level - 1))
-    // Below ~20M edges the per-stage whole-stage-codegen COMPILE cost
-    // dominates this op's dozens of tiny stages (each round's salted
-    // literals defeat the codegen cache) — run interpreted there and
-    // compiled above, where per-row throughput is what matters. Same
-    // adaptivity contract as AQE: pick the physical strategy from the
-    // observed size, never change results.
-    val confs: Seq[(String, String)] =
-      Seq("spark.sql.adaptive.coalescePartitions.parallelismFirst" ->
-        "true") ++
-      (if (m < 20000000L)
-        Seq("spark.sql.codegen.wholeStage" -> "false",
-          "spark.sql.shuffle.partitions" -> nPart.toString)
-       else Seq.empty)
-    withConf(s, confs: _*) {
+    val g = SmallData.louvain(s, m)
+    g.withConfs {
     var wedges = edges0.select($"src", $"dst", lit(1L).as("w"))
       .repartition(nPart, $"src").sortWithinPartitions($"src").cache()
     val cleanup = scala.collection.mutable.ArrayBuffer[DataFrame](wedges)
-    val stagedFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def staged(df: DataFrame): DataFrame = {
-      val out = stage(df); stagedFrames += out; out
-    }
+    val staged = SmallData.stager()
     val deg1deg = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val wedges1 = wedges
     // Per-round stats collect EAGERLY to driver scalars (one small job
@@ -1593,8 +1489,7 @@ object Graph {
         // threads would otherwise sort-merge them (2 extra shuffle
         // stages per round, re-executed per reference until the lazy
         // checkpoint pins)
-        val bestB = if (m < 20000000L) broadcast(best.select($"node", $"b"))
-          else best.select($"node", $"b")
+        val bestB = g.bc(best.select($"node", $"b"))
         labels = staged(labels
           .join(bestB, Seq("node"), "left")
           .select($"node", coalesce($"b", $"label").as("label")))
@@ -1615,7 +1510,7 @@ object Graph {
           val lblS = labels.select($"node".as("src"), $"label".as("ls"))
           val lblD = labels.select($"node".as("dst"), $"label".as("ld"))
           wedges = staged(
-            (if (m < 20000000L)
+            (if (g.small)
               wedges.join(broadcast(lblS), "src").join(broadcast(lblD), "dst")
             else
               wedges.join(lblS, "src")
@@ -1651,8 +1546,7 @@ object Graph {
         // map-side joins broadcast). Above the gate the maps may be
         // executor-memory-sized, so the co-partitioned shuffle shape
         // stands — same adaptivity contract as the codegen switch.
-        def mapSide(df: DataFrame): DataFrame =
-          if (m < 20000000L) broadcast(df) else df
+        val mapSide = g.bc _
         val fragRows = staged(wedges
           .join(mapSide(lbl.select($"node".as("src"), $"label".as("ls"))),
             "src")
@@ -1693,7 +1587,7 @@ object Graph {
           // pays when the dst attach is itself a shuffle join, so it
           // rides the non-broadcast branch only.
           wedges = staged(
-            (if (m < 20000000L)
+            (if (g.small)
               wedges.join(fragS, "src").join(fragD, "dst")
             else
               wedges.join(fragS, "src")
@@ -1725,10 +1619,10 @@ object Graph {
           .select($"node".as("pl"), $"label".as("nl")), $"label" === $"pl")
         .select($"node", $"nl".as("label"))
     LouvainRun(fullLab, qLevels.toSeq, movesPerLevel.toSeq,
-      wedges1, deg1deg.head, m, confs,
+      wedges1, deg1deg.head, m, g,
       () => {
         cleanup.foreach(_.unpersist(false))
-        stagedFrames.foreach(unstage)
+        staged.close()
       })
     }
   }
@@ -1772,16 +1666,15 @@ object Graph {
     * move rounds. Materializes the output, then releases every
     * intermediate via the run's cleanup thunk. */
   private[ops] def louvainOutput(s: SparkSession, run: LouvainRun): DataFrame =
-      withConf(s, run.confs: _*) {
+      run.gate.withConfs { run.gate.staging { stage =>
     import s.implicits._
     val lbl = stage(run.labels) // referenced three times below
     // same small-graph broadcast gate as the run itself: the composed
     // |V|-row label map rides map-side into the edge folds
-    def bc(df: DataFrame): DataFrame =
-      if (run.m < 20000000L) broadcast(df) else df
+    val bc = run.gate.bc _
     val dsum = lbl.join(bc(run.deg1), "node").groupBy($"label")
       .agg(count(lit(1)).as("n_nodes"), sum($"k").as("degree_sum"))
-    val inC = (if (run.m < 20000000L)
+    val inC = (if (run.gate.small)
         run.wedges1
           .join(bc(lbl.select($"node".as("src"), $"label".as("ls"))), "src")
           .join(bc(lbl.select($"node".as("dst"), $"label".as("ld"))), "dst")
@@ -1806,9 +1699,8 @@ object Graph {
       .orderBy($"component")
       .localCheckpoint()
     run.cleanup()
-    unstage(lbl)
     out
-  }
+  } }
 
   private def graphLouvain(s: SparkSession, d: String) = {
     val edges0 = coOrderEdges(s, d).cache()
@@ -2778,15 +2670,8 @@ object Graph {
     // same small-graph physical gate + explicit label broadcast as
     // [[ccLabels]] — the per-round label frames are stats-free
     // checkpoint leaves
-    val m = edges.count()
-    val nPart = math.max(8L, math.min(
-      s.sparkContext.defaultParallelism.toLong, m / 200000L)).toInt
-    def bc(df: DataFrame): DataFrame =
-      if (m < 20000000L) broadcast(df) else df
-    withConf(s, (if (m < 20000000L)
-      Seq("spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.shuffle.partitions" -> nPart.toString)
-     else Seq.empty): _*) {
+    val g = SmallData.graph(s, edges.count())
+    g.withConfs {
     val nodes = edges.select($"src".as("node")).distinct()
     val closed = edges
       .unionByName(nodes.select($"node".as("src"), $"node".as("dst")))
@@ -2795,17 +2680,17 @@ object Graph {
     var labels = nodes.select($"node", $"node".as("label")).localCheckpoint()
     var changed = 1L
     while (changed > 0) {
-      val next = closed.join(bc(labels), $"dst" === $"node")
+      val next = closed.join(g.bc(labels), $"dst" === $"node")
         .groupBy($"src").agg(min($"label").as("label"))
         .withColumnRenamed("src", "node")
         .localCheckpoint()
       changed = next
-        .join(bc(labels.select($"node", $"label".as("prev"))), "node")
+        .join(g.bc(labels.select($"node", $"label".as("prev"))), "node")
         .filter($"label" < $"prev").count()
       labels = next
     }
     closed.unpersist(false)
-    finalCheckpoint(s, labels)
+    finalCheckpoint(labels)
     }
   }
 

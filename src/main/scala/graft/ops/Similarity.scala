@@ -7,6 +7,7 @@ import graft.Tables
 import graft.expressions.GraftFunctions
 import graft.functions.Exact._
 import graft.functions.TextFns.hash60Sql
+import SmallData.finalCheckpoint
 
 /** [EXT] Similarity search over `embeddings.embedding: array<float>`.
   *
@@ -1030,7 +1031,7 @@ object Similarity {
       .orderBy($"parent_cell", $"cell")
       .localCheckpoint()
     e.unpersist(false)
-    unstage(index)
+    SmallData.release(index)
     out
   }
 
@@ -1344,11 +1345,11 @@ object Similarity {
     // sampling/Lloyd/search loop is ~10 rounds of broadcast-argmin
     // map stages over tiny frames (profiled: 7.7 s of the 10.5 s warm
     // run in AQE broadcast-stage overhead at 32 partitions)
-    withConf(s, smallCorpusConfs(s, e.count()): _*) {
+    SmallData.corpus(s, e.count()).withConfs {
     // 60 rows: eager-checkpoint so e's cache has served every
     // consumer (init rounds, Lloyd, search), then drop it —
     // repeated trainer calls must not accumulate cached blocks
-    val out = finalCheckpoint(s, ivfSearch(s, e,
+    val out = finalCheckpoint(ivfSearch(s, e,
         kmLloyd(s, e, kmeansParInit(s, e, IvfCells), KmIters + 1)))
     e.unpersist(false)
     out
@@ -1848,6 +1849,9 @@ object Similarity {
   private val NdRounds = 2
   private val NdK = 3 // kept neighbors per node (knn_graph's k)
 
+  private[ops] def knnDescentHook(s: SparkSession, d: String)
+      : (Seq[(DataFrame, DataFrame)], () => Unit) = knnDescent(s, d)
+
   /** NN-descent refinement rounds (Dong et al. 2011, WWW — "Efficient
     * k-nearest neighbor graph construction for generic similarity
     * measures") over the banded-LSH seed graph: per round each node's
@@ -1864,93 +1868,6 @@ object Similarity {
     * LSH seed), so the report op can render the recall/cost frontier
     * per round. Everything is deterministic: `vec_dot` is the strict
     * fold on both engines, ranks break ties (cosine desc, nb asc). */
-  /** Free a lazily-localCheckpointed frame's RDD blocks (the louvain
-    * `unstage` discipline — a leaked checkpoint survives the
-    * harness's clearCache-between-queries). */
-  private def unstage(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(false)
-      case _ => ()
-    }
-
-  /** Small-corpus physical-strategy gate — the louvain adaptivity
-    * contract (Graph.scala's `m < 20M` codegen/partition switch)
-    * applied to the iterative index builds/walks: below
-    * [[SmallCorpusVecs]] vectors the round loops run dozens of tiny
-    * stages whose per-stage whole-stage-codegen COMPILE cost (fresh
-    * round literals defeat the codegen cache) and 32-partition
-    * shuffle floor dominate the data cost (measured on `ann_hnsw` at
-    * sf0.1: 192 warm jobs summing 16.7 s with no job over 0.6 s —
-    * pure orchestration). Run interpreted with corpus-scaled shuffle
-    * partitions there; compiled/wide above, where per-row throughput
-    * is what matters. Pick-strategy-from-observed-size, results
-    * identical either way — the same contract as AQE. */
-  private[graft] val SmallCorpusVecs = 1000000L
-
-  /** Width for the loop ops' staged leaves below the small-corpus
-    * gate: state frames there are KB-to-MB-sized but inherit the
-    * shuffle-partition layout (floor 8), so every downstream stage
-    * and broadcast collect over a leaf pays one task launch per
-    * partition for bytes of data — measured on `ann_hnsw` at sf0.1
-    * (2k vectors): 88 post-fix jobs whose inputs are 1-task stages
-    * read 13.4 → 10.6 s warm. The width scales with the corpus
-    * (~50k vectors per partition, capped at the parallelism) so a
-    * near-gate corpus still stages wide; above the gate callers skip
-    * the coalesce entirely and leaves keep their natural width. */
-  private def stgWidth(s: SparkSession, n: Long): Int =
-    math.max(1L, math.min(s.sparkContext.defaultParallelism.toLong,
-      n / 50000L)).toInt
-  private def smallCorpusConfs(s: SparkSession, n: Long)
-      : Seq[(String, String)] =
-    if (n < SmallCorpusVecs)
-      // AQE off as well: with partitions pinned corpus-scaled there
-      // is nothing left for it to coalesce, and its per-exchange
-      // stage-job submission (collect stats, replan, new job) IS the
-      // orchestration floor these loops pay ~70 times per run. The
-      // loops' joins don't lose their broadcasts to the static
-      // planner (staged leaves carry no stats — AQE-off alone
-      // sort-merged them and DOUBLED the build, 15.2 -> 28.6 s warm):
-      // every batch-bounded side carries an explicit broadcast under
-      // the same gate (`bc`/`bcG` at the call sites).
-      Seq("spark.sql.codegen.wholeStage" -> "false",
-        "spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.shuffle.partitions" ->
-          math.max(8L, math.min(s.sparkContext.defaultParallelism.toLong,
-            n / 10000L)).toString)
-    else Seq.empty
-
-  /** Run `f` under temporary SQL conf overrides, restoring after —
-    * [[Graph]]'s `withConf` twin. Callers must materialize their
-    * output INSIDE the wrapper. */
-  private def withConf[T](s: SparkSession, kvs: (String, String)*)(f: => T)
-      : T = {
-    val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
-    kvs.foreach { case (k, v) => s.conf.set(k, v) }
-    try f finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
-
-  /** Materialize a CATALOG-FACING result as a localCheckpoint with
-    * AQE re-enabled for that one terminal query: under a static
-    * (AQE-off) plan the captured LogicalRDD records the plan's
-    * output ordering/partitioning attribute-by-attribute, and a
-    * consumer that caches the result and references it twice (e.g. a
-    * self-join) crashes InMemoryRelation's output rebinding
-    * ("key not found: rank#..."). An adaptive plan records no static
-    * metadata at capture time, which is the shape every op returned
-    * before the small-corpus gate. Internal staged frames don't need
-    * this — they are unstaged before the op returns. */
-  private def finalCheckpoint(s: SparkSession, df: DataFrame): DataFrame =
-    withConf(s, "spark.sql.adaptive.enabled" -> "true") {
-      df.localCheckpoint()
-    }
-
-  private[ops] def knnDescentHook(s: SparkSession, d: String)
-      : (Seq[(DataFrame, DataFrame)], () => Unit) = knnDescent(s, d)
-
   private def knnDescent(s: SparkSession, d: String)
       : (Seq[(DataFrame, DataFrame)], () => Unit) = {
     import s.implicits._
@@ -1973,10 +1890,7 @@ object Similarity {
     // (measured: round 2's two tiny frames cost 5.7 + 6.5 s of
     // driver-side plan work over ~50k rows; staged, the same frames
     // are sub-second). The louvain finding, same fix.
-    val stagedFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def stg(df: DataFrame): DataFrame = {
-      val out = df.localCheckpoint(eager = false); stagedFrames += out; out
-    }
+    val stg = SmallData.stager()
     var pool = stg(score(sym))
     var knn = stg(topK(pool))
     val rounds = scala.collection.mutable.ArrayBuffer((pool, knn))
@@ -1996,7 +1910,7 @@ object Similarity {
     }
     (rounds.toSeq, () => {
       e.unpersist(false)
-      stagedFrames.foreach(unstage)
+      stg.close()
     })
   }
 
@@ -2004,11 +1918,10 @@ object Similarity {
     * [[NdRounds]] refinement rounds. */
   private def knnGraphRefined(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    withConf(s,
-      smallCorpusConfs(s, Tables.embeddings(s, d).count()): _*) {
+    SmallData.corpus(s, Tables.embeddings(s, d).count()).withConfs {
     val (rounds, cleanup) = knnDescent(s, d)
     val (_, knn) = rounds.last
-    val out = finalCheckpoint(s,
+    val out = finalCheckpoint(
       knn.select($"src", $"rank".cast("int").as("rank"), $"nb",
         roundHalfUp($"cosine", 6).as("cosine"))
       .orderBy($"src", $"rank"))
@@ -2026,7 +1939,7 @@ object Similarity {
   private def knnRecallReport(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val e = normalized(s, d).cache()
-    withConf(s, smallCorpusConfs(s, e.count()): _*) {
+    SmallData.corpus(s, e.count()).withConfs {
     val xw = Window.partitionBy($"query_id")
       .orderBy($"cosine".desc, $"cand_id".asc)
     val exact = e.filter($"vec_id" < 20)
@@ -2056,7 +1969,7 @@ object Similarity {
           roundHalfUp(coalesce($"n_hits", lit(0L)) / lit(NdK.toDouble), 6)
             .as(s"recall_at_$NdK"))
     }.reduce(_.unionByName(_)).orderBy($"family", $"query_id")
-      .transform(df => finalCheckpoint(s, df))
+      .transform(finalCheckpoint)
     cleanup()
     exact.unpersist(false)
     e.unpersist(false)
@@ -2225,26 +2138,18 @@ object Similarity {
     import s.implicits._
     val e = normalized(s, d).cache()
     val n = e.count()
-    withConf(s, smallCorpusConfs(s, n): _*) {
+    val g = SmallData.corpus(s, n)
+    g.withConfs { g.staging { stg =>
     val cells = math.max(IvfCells,
       math.floor(math.sqrt(n.toDouble)).toInt)
     val cents = e.orderBy($"vec_id".asc).limit(cells)
       .select($"vec_id".as("cell"), $"ne".as("cv"))
-    val stagedFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    // narrow staged leaves below the gate — see [[stgWidth]] (round-18)
-    def stg(df: DataFrame): DataFrame = {
-      val out = (if (n < SmallCorpusVecs) df.coalesce(stgWidth(s, n)) else df)
-        .localCheckpoint(eager = false)
-      stagedFrames += out; out
-    }
     val adj = stg(navAdjacency(e, cents))
     val q = e.filter($"vec_id" < 20)
       .select($"vec_id".as("query_id"), $"ne".as("nq")).cache()
-    def bcG(df: DataFrame): DataFrame =
-      if (n < SmallCorpusVecs) broadcast(df) else df
     val w = Window.partitionBy($"query_id")
       .orderBy($"cosine".desc, $"cand_id".asc)
-    val (beam, vis) = navWalk(q, cents, adj, stg, bc = bcG)
+    val (beam, vis) = navWalk(q, cents, adj, stg, bc = g.bc)
     val xw = Window.partitionBy($"query_id")
       .orderBy($"cosine".desc, $"cand_id".asc)
     val exact = e.filter($"vec_id" < 20)
@@ -2264,16 +2169,15 @@ object Similarity {
       .join(top5.withColumn("hit", lit(1L)),
         Seq("query_id", "cand_id"), "left")
       .groupBy($"query_id").agg(sum(coalesce($"hit", lit(0L))).as("n_hits"))
-    val out = finalCheckpoint(s,
+    val out = finalCheckpoint(
       top1.join(nc, "query_id").join(hits, "query_id")
       .select($"query_id", $"top_cand", $"top_cosine", $"n_cand",
         $"n_hits", roundHalfUp($"n_hits" / 5.0, 6).as("recall_at_5"))
       .orderBy($"query_id"))
-    stagedFrames.foreach(unstage)
     q.unpersist(false)
     e.unpersist(false)
     out
-    }
+    } }
   }
 
   private val NavStoreDir = "/tmp/graft_navgraph_index"
@@ -2295,7 +2199,7 @@ object Similarity {
           expr(s"${sparkHash60("concat('ing:', vec_id)")} % 10") === 0)
         .filter(!$"is_new").select($"vec_id", $"ne").cache()
       val nIdx = e.count()
-      withConf(s, smallCorpusConfs(s, nIdx): _*) {
+      SmallData.corpus(s, nIdx).withConfs {
       val cells = math.max(IvfCells,
         math.floor(math.sqrt(nIdx.toDouble)).toInt)
       val cents = e.orderBy($"vec_id".asc).limit(cells)
@@ -2332,32 +2236,22 @@ object Similarity {
     // ingest slice is the deterministic ~10% — x10 approximates the
     // corpus scale the walk's adjacency lookups actually touch
     val nScale = q.count() * 10L
-    withConf(s, smallCorpusConfs(s, nScale): _*) {
-    val stagedFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    // narrow staged leaves below the gate — see [[stgWidth]] (round-18)
-    def stg(df: DataFrame): DataFrame = {
-      val out = (if (nScale < SmallCorpusVecs)
-        df.coalesce(stgWidth(s, nScale)) else df)
-        .localCheckpoint(eager = false)
-      stagedFrames += out; out
-    }
-    def bcG(df: DataFrame): DataFrame =
-      if (nScale < SmallCorpusVecs) broadcast(df) else df
-    val (beam, vis) = navWalk(q, cents, adj, stg, bc = bcG)
+    val g = SmallData.corpus(s, nScale)
+    g.withConfs { g.staging { stg =>
+    val (beam, vis) = navWalk(q, cents, adj, stg, bc = g.bc)
     val w = Window.partitionBy($"query_id")
       .orderBy($"cosine".desc, $"cand_id".asc)
     val nc = vis.groupBy($"query_id").agg(count(lit(1)).as("n_cand"))
-    val out = finalCheckpoint(s,
+    val out = finalCheckpoint(
       beam.withColumn("rank", row_number().over(w))
       .filter($"rank" <= 3)
       .join(nc, "query_id")
       .select($"query_id".as("inc_id"), $"rank".cast("int").as("rank"),
         $"cand_id", roundHalfUp($"cosine", 6).as("cosine"), $"n_cand")
       .orderBy($"inc_id", $"rank"))
-    stagedFrames.foreach(unstage)
     q.unpersist(false)
     out
-    }
+    } }
   }
 
   private def annGraphIncrementalOracle: String =
@@ -2614,8 +2508,8 @@ object Similarity {
     // broadcast into the joins — staged leaves carry no stats, so a
     // static plan would otherwise sort-merge each of the ~50 loop
     // joins. Above the gate the keyed-shuffle shape stands unchanged.
-    def bc(df: DataFrame): DataFrame =
-      if (maxId >= 0 && maxId < SmallCorpusVecs) broadcast(df) else df
+    val bc: DataFrame => DataFrame =
+      if (maxId >= 0) SmallData.corpus(s, maxId).bc else identity
     for (b <- 1 to HnswRounds) {
       val lo = HnswSeed.toLong << (b - 1)
       val hi = HnswSeed.toLong << b
@@ -2667,25 +2561,17 @@ object Similarity {
     val e = normalized(s, d).cache()
     // one cache-filling count, doubling as the conf-gate size probe
     val n = e.count()
-    withConf(s, smallCorpusConfs(s, n): _*) {
-    def bcG(df: DataFrame): DataFrame =
-      if (n < SmallCorpusVecs) broadcast(df) else df
-    val stagedFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    // narrow staged leaves below the gate — see [[stgWidth]] (round-18)
-    def stg(df: DataFrame): DataFrame = {
-      val out = (if (n < SmallCorpusVecs) df.coalesce(stgWidth(s, n)) else df)
-        .localCheckpoint(eager = false)
-      stagedFrames += out; out
-    }
+    val g = SmallData.corpus(s, n)
+    g.withConfs { g.staging { stg =>
     val adj = hnswBuild(e, stg)
     val adjV = adj.join(
-      bcG(e.select($"vec_id".as("nb"), $"ne".as("nv"))), "nb")
+      g.bc(e.select($"vec_id".as("nb"), $"ne".as("nv"))), "nb")
       .select($"src", $"nb", $"nv")
     val cents = e.filter($"vec_id" < HnswSeed)
       .select($"vec_id".as("cell"), $"ne".as("cv"))
     val q = e.filter($"vec_id" < 20)
       .select($"vec_id".as("query_id"), $"ne".as("nq")).cache()
-    val (beam, vis) = navWalk(q, cents, adjV, stg, bc = bcG)
+    val (beam, vis) = navWalk(q, cents, adjV, stg, bc = g.bc)
     val w = Window.partitionBy($"query_id")
       .orderBy($"cosine".desc, $"cand_id".asc)
     val xw = Window.partitionBy($"query_id")
@@ -2707,16 +2593,15 @@ object Similarity {
       .join(top5.withColumn("hit", lit(1L)),
         Seq("query_id", "cand_id"), "left")
       .groupBy($"query_id").agg(sum(coalesce($"hit", lit(0L))).as("n_hits"))
-    val out = finalCheckpoint(s,
+    val out = finalCheckpoint(
       top1.join(nc, "query_id").join(hits, "query_id")
       .select($"query_id", $"top_cand", $"top_cosine", $"n_cand",
         $"n_hits", roundHalfUp($"n_hits" / 5.0, 6).as("recall_at_5"))
       .orderBy($"query_id"))
-    stagedFrames.foreach(unstage)
     q.unpersist(false)
     e.unpersist(false)
     out
-    }
+    } }
   }
 
   /** Beam-walk CTE chain over adjacency `adjRel` for queries `qRel`,
@@ -2877,15 +2762,8 @@ object Similarity {
           expr(s"${sparkHash60("concat('ing:', vec_id)")} % 10") === 0)
         .filter(!$"is_new").select($"vec_id", $"ne").cache()
       val nIdx = e.count()
-      withConf(s, smallCorpusConfs(s, nIdx): _*) {
-      val stagedFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      // narrow staged leaves below the gate — see [[stgWidth]] (r18)
-      def stg(df: DataFrame): DataFrame = {
-        val out = (if (nIdx < SmallCorpusVecs)
-          df.coalesce(stgWidth(s, nIdx)) else df)
-          .localCheckpoint(eager = false)
-        stagedFrames += out; out
-      }
+      val g = SmallData.corpus(s, nIdx)
+      g.withConfs { g.staging { stg =>
       val adj = hnswBuild(e, stg)
       e.filter($"vec_id" < HnswSeed)
         .select($"vec_id".as("cell"), $"ne".as("cv"))
@@ -2893,9 +2771,8 @@ object Similarity {
       adj.join(e.select($"vec_id".as("nb"), $"ne".as("nv")), "nb")
         .select($"src", $"nb", $"nv")
         .write.parquet(s"$tmp/adj")
-      stagedFrames.foreach(unstage)
       e.unpersist(false)
-      }
+      } }
     }
 
   /** Ingest against the persisted HNSW-built graph — the complete
@@ -2922,32 +2799,22 @@ object Similarity {
     // ingest slice is the deterministic ~10% — x10 approximates the
     // corpus scale the walk's adjacency lookups actually touch
     val nScale = q.count() * 10L
-    withConf(s, smallCorpusConfs(s, nScale): _*) {
-    val stagedFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    // narrow staged leaves below the gate — see [[stgWidth]] (round-18)
-    def stg(df: DataFrame): DataFrame = {
-      val out = (if (nScale < SmallCorpusVecs)
-        df.coalesce(stgWidth(s, nScale)) else df)
-        .localCheckpoint(eager = false)
-      stagedFrames += out; out
-    }
-    def bcG(df: DataFrame): DataFrame =
-      if (nScale < SmallCorpusVecs) broadcast(df) else df
-    val (beam, vis) = navWalk(q, cents, adj, stg, bc = bcG)
+    val g = SmallData.corpus(s, nScale)
+    g.withConfs { g.staging { stg =>
+    val (beam, vis) = navWalk(q, cents, adj, stg, bc = g.bc)
     val w = Window.partitionBy($"query_id")
       .orderBy($"cosine".desc, $"cand_id".asc)
     val nc = vis.groupBy($"query_id").agg(count(lit(1)).as("n_cand"))
-    val out = finalCheckpoint(s,
+    val out = finalCheckpoint(
       beam.withColumn("rank", row_number().over(w))
       .filter($"rank" <= 3)
       .join(nc, "query_id")
       .select($"query_id".as("inc_id"), $"rank".cast("int").as("rank"),
         $"cand_id", roundHalfUp($"cosine", 6).as("cosine"), $"n_cand")
       .orderBy($"inc_id", $"rank"))
-    stagedFrames.foreach(unstage)
     q.unpersist(false)
     out
-    }
+    } }
   }
 
   /** Oracle twin of [[annHnswIncremental]]: the insertion build
@@ -3566,11 +3433,11 @@ object Similarity {
   private def annIvfPqKmeans(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val e = normalized(s, d).cache()
-    // small-corpus gate (see smallCorpusConfs): the Lloyd trainer +
+    // small-corpus gate (see SmallData.corpus): the Lloyd trainer +
     // codebook loop is all tiny broadcast-argmin stages; materialize
     // the ≤Q×3 output inside so the gate covers execution
-    withConf(s, smallCorpusConfs(s, e.count()): _*) {
-    val out = finalCheckpoint(s, ivfPqKmeansSearch(s, e))
+    SmallData.corpus(s, e.count()).withConfs {
+    val out = finalCheckpoint(ivfPqKmeansSearch(s, e))
     e.unpersist(false)
     out
     }
