@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: times every catalog query on the sf dir from
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line.
@@ -14,21 +13,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     ScaleData.checkDir(sfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Respect AQE's advisory partition size instead of maximizing
-      // parallelism: small shuffles coalesce to few tasks (the Spark
-      // docs' recommended setting; at scale the 64 MB advisory size
-      // governs, so this never under-partitions big data).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // same TZ binding as Verify: event-time bucketing row counts must
-      // not depend on the host's default zone
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     // GRAFT_BENCH_ONLY=<comma-separated name prefixes>: local smoke
     // filter (the Verify third-arg convention); the driver leaves it
     // unset and benches the full catalog.
@@ -45,24 +30,35 @@ object Bench {
     // sealed from the WARM timings (the SpotBench-warm protocol);
     // "queries" carries warm so round-over-round diffs stay
     // like-for-like, with the cold map alongside.
-    val results = names.map { name =>
-      val t = (1 to 2).map { _ =>
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        try { SparkEntry.queries(name)(spark, sfDir).count() }
-        catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
+    // A query that throws on either pass is reported on stderr and
+    // listed under "errors", never timed: it stays out of both maps
+    // and both totals.
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    val results = names.flatMap { name =>
+      try {
+        val t = (1 to 2).map { _ =>
+          spark.catalog.clearCache()
+          val t0 = System.nanoTime()
+          SparkEntry.queries(name)(spark, sfDir).count()
+          (System.nanoTime() - t0) / 1e9
+        }
+        Some((name, t.head, t.last))
+      } catch { case e: Throwable =>
+        System.err.println(
+          s"[bench] $name failed: ${e.toString.linesIterator.next()}")
+        failed += name
+        None
       }
-      (name, t.head, t.last)
     }
     def jmap(f: ((String, Double, Double)) => Double): String = results
       .map { r => s"\"" + r._1 + "\":" + f(r) }.mkString("{", ",", "}")
     val totalWarm = results.map(_._3).sum
     val totalCold = results.map(_._2).sum
+    val errors = failed.map(n => s"\"$n\"").mkString("[", ",", "]")
     val json =
       s"""{"metric":"total","value":$totalWarm,"unit":"sec","basis":"warm",""" +
         s""""total_cold":$totalCold,"queries":${jmap(_._3)},""" +
-        s""""queries_cold":${jmap(_._2)},"sf":"$sfDir"}"""
+        s""""queries_cold":${jmap(_._2)},"errors":$errors,"sf":"$sfDir"}"""
     // Belt-and-braces channel: the results must survive even if late
     // shutdown threads spew over stdout's tail (round 11 lost its
     // per-query map exactly that way), so write the file FIRST.

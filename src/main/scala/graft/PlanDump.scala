@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for the named catalog queries to
   * stdout and (when `GRAFT_PLAN_DIR` is set) one file per query —
@@ -9,10 +8,7 @@ object PlanDump {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val suffix = sys.env.getOrElse("GRAFT_PLAN_SUFFIX", "")
     val outDir = sys.env.get("GRAFT_PLAN_DIR")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SparkEntry.localSession()
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { name =>
       println(s"===== $name =====")

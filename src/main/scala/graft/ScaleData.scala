@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-rehearsal corpus builder: expands the sf0.1 documents,
@@ -85,12 +84,7 @@ object ScaleData {
       s"factor must be in [1, 99] (copy ids shift by k*10^7 and must stay " +
         s"below the 10^9 fresh-key offset); got $factor")
     val docFactor = if (hotSrcMode) factor else math.min(factor, 21)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
 
     val vowelTargets = "aeioubcdfghjklmnpqrstvwxyz"
     val docs = Tables.documents(spark, sfDir)

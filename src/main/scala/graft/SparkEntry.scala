@@ -50,4 +50,26 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     catalog.flatMap(op => op.oracle.map(op.name -> _)).toMap
+
+  /** The session every main runs on: `local[SPARK_GRAFT_CPUS]`
+    * (default 4) with as many shuffle partitions, UTC session time, no
+    * UI, and log level WARN. */
+  def localSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      // Respect AQE's advisory partition size instead of maximizing
+      // parallelism: small shuffles coalesce to few tasks (the Spark
+      // docs' recommended setting; at scale the 64 MB advisory size
+      // governs, so this never under-partitions big data).
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      // event-time bucketing row counts must not depend on the host's
+      // default zone
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

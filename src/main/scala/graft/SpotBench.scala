@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Local iteration tool: times the given queries (default: the hot
   * [EXT] set) at sf0.1 twice each (cold = plan+codegen+JIT, warm =
@@ -9,11 +8,7 @@ object SpotBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     ScaleData.checkDir(sfDir)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SparkEntry.localSession()
     spark.sparkContext.setLogLevel("ERROR")
     val hot = if (args.nonEmpty) args.toSeq
       else Seq("dedup_embedding", "dedup_minhash", "dedup_ngram",

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import scala.collection.concurrent.TrieMap
 
@@ -10,11 +9,7 @@ object StageProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val name = if (args.nonEmpty) args(0) else "graph_leiden"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SparkEntry.localSession()
     spark.sparkContext.setLogLevel("ERROR")
     val acc = TrieMap.empty[String, (Double, Int)]
     @volatile var record = false

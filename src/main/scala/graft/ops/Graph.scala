@@ -799,15 +799,21 @@ object Graph {
       .join(labels.select($"node".as("dst"), $"label".as("lb")), "dst")
       .filter($"la" === $"lb")
       .groupBy($"la".as("label")).agg(count(lit(1)).as("n_in"))
-    dsum.join(inC, Seq("label"), "left")
-      .crossJoin(broadcast(mTot))
-      .select($"label".as("component"), $"n_nodes",
-        coalesce($"n_in", lit(0L)).as("internal_edges"),
-        $"degree_sum",
-        roundHalfUp(lit(1.0) * coalesce($"n_in", lit(0L)) / $"m" -
-          (lit(1.0) * $"degree_sum" / $"m") * (lit(1.0) * $"degree_sum" / $"m"),
-          6).as("contribution"))
+    communityStats(dsum.join(inC, Seq("label"), "left")
+      .crossJoin(broadcast(mTot)), $"m")
       .orderBy($"component")
+  }
+
+  /** The per-community output columns of every community op —
+    * `component, n_nodes, internal_edges, degree_sum, contribution` —
+    * from `(label, n_nodes, n_in, degree_sum)` rows over `m` directed
+    * edges. A NULL `n_in` is a community without internal edges. */
+  private def communityStats(st: DataFrame, m: Column): DataFrame = {
+    val nIn = coalesce(col("n_in"), lit(0L))
+    val share = lit(1.0) * col("degree_sum") / m
+    st.select(col("label").as("component"), col("n_nodes"),
+      nIn.as("internal_edges"), col("degree_sum"),
+      roundHalfUp(lit(1.0) * nIn / m - share * share, 6).as("contribution"))
   }
 
   /** One parallel Louvain move phase (Blondel et al. 2008,
@@ -849,57 +855,20 @@ object Graph {
     louvainStepOf(s, coOrderEdges(s, d).cache())
   }
 
-  /** The move phase over any `(node, label)` base partition — split
+  /** The phase-1 move round from singletons over any edge list — split
     * out so GraphSpec can drive the two-triangles hand case. */
   private[graft] def louvainStepOf(s: SparkSession,
                                    edges: DataFrame): DataFrame = {
     import s.implicits._
-    val mTot = edges.agg(count(lit(1)).as("m")) // 1 row
-    val deg = edges.groupBy($"src").agg(count(lit(1)).as("k"))
-      .withColumnRenamed("src", "node").cache()
-    // Singleton base specializes the general gain
-    // 2M(d_ib−d_ia) − 2k(deg_b−deg_a) − 2k² to 2M − 2·k_src·k_dst per
-    // DISTINCT edge (d_ia = 0, deg_a = k, d_ib = 1): no label joins,
-    // no (node, community) fold — two degree lookups per edge row.
-    // Half-coloring: only EVEN nodes move this phase (an exact
-    // 2-coloring of the bipartite co-order graph — movers pairwise
-    // non-adjacent, targets stationary). The DuckDB oracle keeps the
-    // GENERAL formulation, so the hash gate proves this specialized
-    // derivation equals the textbook algorithm.
-    val cand = edges.filter($"src" % 2 === 0)
-      .join(deg.select($"node".as("src"), $"k"), "src")
-      .join(deg.select($"node".as("dst"), $"k".as("kb")), "dst")
-      .crossJoin(broadcast(mTot))
-      .select($"src".as("node"), $"dst".as("b"),
-        (lit(2L) * $"m" - lit(2L) * $"k" * $"kb").as("gain"))
-    val w = Window.partitionBy($"node").orderBy($"gain".desc, $"b".asc)
-    // Per-TARGET capacity 1 (best gain wins the slot): movers are then
-    // pairwise non-adjacent with stationary, unshared targets, so the
-    // batch's ΔQ is EXACTLY Σ individual gains > 0 on the bipartite
-    // graph — without the cap the per-node "best" move herds whole
-    // customer cohorts onto the lowest-degree suppliers and the
-    // (Σk_i)² degree cross-terms swamp the 1-edge in-gains (measured
-    // at sf0.01: Σdeg_c² 25M → 512M, batch rejected).
-    val wt = Window.partitionBy($"b").orderBy($"gain".desc, $"node".asc)
-    val best = cand.withColumn("rn", row_number().over(w))
-      .filter($"rn" === 1 && $"gain" > 0)
-      .withColumn("tr", row_number().over(wt))
-      .filter($"tr" === 1)
-      .select($"node", $"b").cache()
-    val moved = deg.select($"node").join(best, Seq("node"), "left")
-      .select($"node", coalesce($"b", $"node").as("label"))
+    val SingletonRound(deg, best, moved, inC, mTot) =
+      singletonRound(s, edges)
     // Community stats in closed form — the gate's Q integers AND the
     // output rows derive from these frames; accepted node labels never
     // rejoin the edge list. Base (singletons): n_in = 0, degree = k.
-    // Moved: group members by final label; a community has internal
-    // edges (exactly 2: the one mover-target edge, both directions)
-    // iff it received a mover AND its anchor node itself stayed.
+    // Moved: group members by final label (internal edges from inC).
     val sbst = deg.select($"node".as("label"),
       lit(1L).as("n_nodes"), lit(0L).as("n_in"), $"k".as("degree_sum"))
       .cache()
-    val inC = best.join(best.select($"node".as("b2")),
-        $"b" === $"b2", "left_anti")
-      .select($"b".as("label"), lit(2L).as("n_in"))
     val smst = moved.join(deg, "node").groupBy($"label")
       .agg(count(lit(1)).cast("long").as("n_nodes"),
         sum($"k").as("degree_sum"))
@@ -924,13 +893,7 @@ object Graph {
     val accFlag = broadcast(qcmp.select($"acc"))
     val accepted = smst.crossJoin(accFlag).filter($"acc")
       .unionByName(sbst.crossJoin(accFlag).filter(!$"acc"))
-    val out = accepted
-      .crossJoin(broadcast(mTot))
-      .select($"label".as("component"), $"n_nodes",
-        $"n_in".as("internal_edges"), $"degree_sum",
-        roundHalfUp(lit(1.0) * $"n_in" / $"m" -
-          (lit(1.0) * $"degree_sum" / $"m") *
-            (lit(1.0) * $"degree_sum" / $"m"), 6).as("contribution"))
+    val out = communityStats(accepted.crossJoin(broadcast(mTot)), $"m")
       .crossJoin(broadcast(qcmp.select($"q_before", $"q_after")))
       .orderBy($"component")
       // ≤|communities| rows: eager-checkpoint so the op's caches have
@@ -938,16 +901,28 @@ object Graph {
       // them — repeated calls in a long-lived session must not
       // accumulate cached blocks
       .localCheckpoint()
-    Seq(deg, best, sbst, smst, qcmp, edges).foreach(_.unpersist(false))
+    Seq(deg, best, moved, sbst, smst, qcmp, edges).foreach(_.unpersist(false))
     out
   }
 
-  /** The phase-1 ACCEPTED partition as labels — [[louvainStepOf]]'s
-    * internal decision re-derived (same candidate/capacity/gate
-    * arithmetic; the step op renders closed-form singleton stats, so
-    * it never materializes this frame itself). Feeds phase 2. */
-  private[graft] def louvainPhase1Labels(s: SparkSession,
-                                         edges: DataFrame): DataFrame = {
+  /** Phase 1's singleton move round, shared by [[louvainStepOf]] (which
+    * renders closed-form stats from it) and [[louvainPhase1Labels]]
+    * (which renders labels): the node degrees `(node, k)`, the accepted
+    * moves `(node, b)`, the moved partition `(node, label)` before the
+    * Q gate, its communities with internal edges `(label, n_in)` and
+    * the 1-row edge total `m`. deg, best and moved are cached; the
+    * caller unpersists them.
+    *
+    * Unlike [[louvainMoveBest]] this round has no source/target
+    * disjointness filter: on the bipartite co-order graph the even
+    * movers' targets are stationary anyway, and on a general graph the
+    * two rounds decide differently (GraphSpec's two-triangles hand
+    * case pins this one). */
+  private final case class SingletonRound(deg: DataFrame, best: DataFrame,
+      moved: DataFrame, inC: DataFrame, mTot: DataFrame)
+
+  private def singletonRound(s: SparkSession, edges: DataFrame)
+      : SingletonRound = {
     import s.implicits._
     // |V|-row sides broadcast below the small-graph gate (the
     // louvainMoveBest discipline): the caller's edge frame is cached
@@ -955,9 +930,18 @@ object Graph {
     // static planner would sort-merge the |E|-row candidate stream
     // against them per attach.
     val bc = SmallData.graph(s, edges.count()).bc _
-    val mTot = edges.agg(count(lit(1)).as("m"))
+    val mTot = edges.agg(count(lit(1)).as("m")) // 1 row
     val deg = edges.groupBy($"src").agg(count(lit(1)).as("k"))
       .withColumnRenamed("src", "node").cache()
+    // Singleton base specializes the general gain
+    // 2M(d_ib−d_ia) − 2k(deg_b−deg_a) − 2k² to 2M − 2·k_src·k_dst per
+    // DISTINCT edge (d_ia = 0, deg_a = k, d_ib = 1): no label joins,
+    // no (node, community) fold — two degree lookups per edge row.
+    // Half-coloring: only EVEN nodes move this phase (an exact
+    // 2-coloring of the bipartite co-order graph — movers pairwise
+    // non-adjacent, targets stationary). The DuckDB oracle keeps the
+    // GENERAL formulation, so the hash gate proves this specialized
+    // derivation equals the textbook algorithm.
     val cand = edges.filter($"src" % 2 === 0)
       .join(bc(deg.select($"node".as("src"), $"k")), "src")
       .join(bc(deg.select($"node".as("dst"), $"k".as("kb"))), "dst")
@@ -965,6 +949,13 @@ object Graph {
       .select($"src".as("node"), $"dst".as("b"),
         (lit(2L) * $"m" - lit(2L) * $"k" * $"kb").as("gain"))
     val w = Window.partitionBy($"node").orderBy($"gain".desc, $"b".asc)
+    // Per-TARGET capacity 1 (best gain wins the slot): movers are then
+    // pairwise non-adjacent with stationary, unshared targets, so the
+    // batch's ΔQ is EXACTLY Σ individual gains > 0 on the bipartite
+    // graph — without the cap the per-node "best" move herds whole
+    // customer cohorts onto the lowest-degree suppliers and the
+    // (Σk_i)² degree cross-terms swamp the 1-edge in-gains (measured
+    // at sf0.01: Σdeg_c² 25M → 512M, batch rejected).
     val wt = Window.partitionBy($"b").orderBy($"gain".desc, $"node".asc)
     val best = cand.withColumn("rn", row_number().over(w))
       .filter($"rn" === 1 && $"gain" > 0)
@@ -973,11 +964,26 @@ object Graph {
       .select($"node", $"b").cache()
     val moved = deg.select($"node").join(bc(best), Seq("node"), "left")
       .select($"node", coalesce($"b", $"node").as("label")).cache()
+    // A moved community has internal edges (exactly 2: the one
+    // mover-target edge, both directions) iff it received a mover AND
+    // its anchor node itself stayed.
+    val inC = best.join(bc(best.select($"node".as("b2"))),
+        $"b" === $"b2", "left_anti")
+      .select($"b".as("label"), lit(2L).as("n_in"))
+    SingletonRound(deg, best, moved, inC, mTot)
+  }
+
+  /** The phase-1 ACCEPTED partition as labels — [[louvainStepOf]]'s
+    * round and Q gate rendered as `(node, label)` rows instead of
+    * community stats. Feeds phase 2. */
+  private[graft] def louvainPhase1Labels(s: SparkSession,
+                                         edges: DataFrame): DataFrame = {
+    import s.implicits._
+    val SingletonRound(deg, best, moved, inC, mTot) =
+      singletonRound(s, edges)
     // the step op's gate integers (singleton base: ib = 0, sb = Σk²)
     val qi = deg.agg(sum($"k" * $"k").as("sb"))
-      .crossJoin(best.join(bc(best.select($"node".as("b2"))),
-          $"b" === $"b2", "left_anti")
-        .agg((count(lit(1)) * 2).as("im")))
+      .crossJoin(inC.agg((count(lit(1)) * 2).as("im")))
       .crossJoin(moved.join(deg, "node").groupBy($"label")
         .agg(sum($"k").as("ds")).agg(sum($"ds" * $"ds").as("sm")))
       .crossJoin(mTot)
@@ -990,17 +996,16 @@ object Graph {
   }
 
   /** One GENERAL-base Louvain move phase (the machinery phase 1's
-    * singleton specialization avoids): per-node edge counts into each
-    * neighbor community (`d_ic`), the textbook gain
-    * `2M(d_ib − d_ia) − 2k(deg_b − deg_a) − 2k²` on exact integers,
-    * movers restricted to one color (pairwise non-adjacent on the
-    * bipartite graph), a SOURCE/TARGET-disjointness filter plus
-    * capacity-1 windows per target AND per source community (so every
-    * affected community sees exactly one membership event — the batch
-    * additivity conditions), and the exact-integer Q gate with
-    * fallback to the base partition. Output schema = the step op's
-    * (component stats + q_before/q_after), stats computed generally
-    * via two label joins (the `graph_modularity` folds). */
+    * singleton specialization avoids): the movers are one
+    * [[louvainMoveBest]] round over the unit-weight edge list — the
+    * textbook gain on exact integers, movers restricted to one color,
+    * source/target disjointness and capacity 1 per target AND per
+    * source community (so every affected community sees exactly one
+    * membership event — the batch additivity conditions) — then the
+    * exact-integer Q gate with fallback to the base partition. Output
+    * schema = the step op's (component stats + q_before/q_after),
+    * stats computed generally via two label joins (the
+    * `graph_modularity` folds). */
   private[graft] def louvainGeneralPhase(s: SparkSession, edges: DataFrame,
       base: DataFrame, moverParity: Int): DataFrame = {
     import s.implicits._
@@ -1013,66 +1018,18 @@ object Graph {
     // the |E|-row folds against it (measured: 20.1 s of the step2
     // warm run sat in those broadcast/shuffle stages). Above the
     // gate nothing changes.
-    val g = SmallData.louvain(s, edges.count())
+    val m = edges.count()
+    val g = SmallData.louvain(s, m)
     g.withConfs {
     val bc = g.bc _
-    val mTot = edges.agg(count(lit(1)).as("m"))
     val deg = edges.groupBy($"src").agg(count(lit(1)).as("k"))
       .withColumnRenamed("src", "node").cache()
     val lbl = base.cache()
-    val cdeg = lbl.join(bc(deg), "node").groupBy($"label")
-      .agg(sum($"k").as("degc")).cache()
-    // only mover-side rows ever feed gains/deltas, so the edge fold
-    // and the self-community decoration restrict to the mover parity
-    // up front (community degrees still fold over ALL nodes)
-    val dic = edges.filter($"src" % 2 === moverParity)
-      .join(bc(lbl.select($"node".as("dst"), $"label".as("c"))), "dst")
-      .groupBy($"src", $"c").agg(count(lit(1)).as("dcount"))
-      .withColumnRenamed("src", "node").cache()
-    val selfx = lbl.filter($"node" % 2 === moverParity)
-      .join(bc(deg), "node")
-      .join(bc(cdeg.select($"label", $"degc".as("deg_a"))), "label")
-      .join(bc(dic.select($"node", $"c".as("label"), $"dcount".as("d_ia"))),
-        Seq("node", "label"), "left")
-      .select($"node", $"label".as("a"), $"k", $"deg_a",
-        coalesce($"d_ia", lit(0L)).as("d_ia"))
-    val cand = dic.select($"node", $"c".as("b"), $"dcount")
-      .join(bc(selfx), "node")
-      .filter($"b" =!= $"a")
-      .join(bc(cdeg.select($"label".as("b"), $"degc".as("deg_b"))), "b")
-      .crossJoin(broadcast(mTot))
-      .select($"node", $"a", $"b", $"k", $"d_ia", $"dcount",
-        (lit(2L) * $"m" * ($"dcount" - $"d_ia") -
-          lit(2L) * $"k" * ($"deg_b" - $"deg_a") -
-          lit(2L) * $"k" * $"k").as("gain"))
-    // Argmax via max_by hash aggregation instead of row_number
-    // windows: same winners (tie-break keys are unique per group —
-    // (node, b) unique in cand, node unique in winners — and the
-    // negated secondary key encodes "then smallest b/node"), but a
-    // map-side-combined agg replaces each exchange+sort+window; the
-    // ORACLE keeps the ROW_NUMBER formulation, so the hash gate
-    // proves the argmax algebra.
-    val winners = cand
-      .groupBy($"node")
-      .agg(max_by(struct($"a", $"b", $"k", $"d_ia", $"dcount", $"gain"),
-        struct($"gain", -$"b")).as("w"))
-      .select($"node", $"w.*")
-      .filter($"gain" > 0)
-      .cache()
-    val disjoint = winners
-      .join(bc(winners.select($"a".as("b")).distinct()), Seq("b"),
-        "left_anti")
-      .join(bc(winners.select($"b".as("a")).distinct()), Seq("a"),
-        "left_anti")
-    val best = disjoint
-      .groupBy($"b")
-      .agg(max_by(struct($"node", $"a", $"k", $"d_ia", $"dcount", $"gain"),
-        struct($"gain", -$"node")).as("w"))
-      .select($"b", $"w.*")
-      .groupBy($"a")
-      .agg(max_by(struct($"node", $"b", $"k", $"d_ia", $"dcount"),
-        struct($"gain", -$"node")).as("w"))
-      .select($"a", $"w.*").cache()
+    val cleanup = scala.collection.mutable.ArrayBuffer[DataFrame](
+      deg, lbl, edges)
+    val best = louvainMoveBest(s, edges.select($"src", $"dst",
+        lit(1L).as("w")), deg, m, lbl, level = 1, parity = moverParity,
+      cleanup).cache()
     // Base per-label stats: ONE edges⋈labels⋈labels fold + one keyed
     // degree fold. The MOVED side is then maintained by EXACT DELTAS —
     // the disjointness + capacity constraints guarantee each affected
@@ -1109,6 +1066,7 @@ object Graph {
         ($"n_nodes" + coalesce($"dn", lit(0L))).as("n_nodes"),
         ($"degree_sum" + coalesce($"dk", lit(0L))).as("degree_sum"))
       .filter($"n_nodes" > 0L).cache()
+    cleanup ++= Seq(best, binc, bstat, minc, mstat)
     def scal(inc: DataFrame, st: DataFrame) =
       inc.agg(coalesce(sum($"n_in"), lit(0L)).as("i")).crossJoin(
         st.agg(sum($"degree_sum" * $"degree_sum").as("s")))
@@ -1120,10 +1078,9 @@ object Graph {
     // the branch logic in SQL, so the hash gate proves the pick.
     val qrow = scal(binc, bstat).select($"i".as("ib"), $"s".as("sb"))
       .crossJoin(scal(minc, mstat).select($"i".as("im"), $"s".as("sm")))
-      .crossJoin(mTot)
       .head
     def lg(i: Int): Long = if (qrow.isNullAt(i)) 0L else qrow.getLong(i)
-    val (ib, sb, im, sm, m) = (lg(0), lg(1), lg(2), lg(3), lg(4))
+    val (ib, sb, im, sm) = (lg(0), lg(1), lg(2), lg(3))
     val acc = im * m - sm >= ib * m - sb
     // m = 0 only on an empty graph (then ib = im = 0 and q is NULL on
     // both engines via the oracle's division; here the frames below
@@ -1132,43 +1089,31 @@ object Graph {
       1.0 * i / m - 1.0 * s2 / m / m
     val qBefore = if (m == 0L) 0.0 else q(ib, sb)
     val qAfter = if (acc && m != 0L) q(im, sm) else qBefore
-    def stats(inc: DataFrame, st: DataFrame) =
-      st.join(inc, Seq("label"), "left")
-        .select($"label", $"n_nodes", $"degree_sum",
-          coalesce($"n_in", lit(0L)).as("n_in"))
-    val chosen = if (acc) stats(minc, mstat) else stats(binc, bstat)
-    val out = chosen
-      .select($"label".as("component"), $"n_nodes",
-        $"n_in".as("internal_edges"), $"degree_sum",
-        roundHalfUp(lit(1.0) * $"n_in" / lit(m) -
-          (lit(1.0) * $"degree_sum" / lit(m)) *
-            (lit(1.0) * $"degree_sum" / lit(m)), 6).as("contribution"),
-        roundHalfUp(lit(qBefore), 6).as("q_before"),
-        roundHalfUp(lit(qAfter), 6).as("q_after"))
+    val (inc, st) = if (acc) (minc, mstat) else (binc, bstat)
+    val out = communityStats(st.join(inc, Seq("label"), "left"), lit(m))
+      .withColumn("q_before", roundHalfUp(lit(qBefore), 6))
+      .withColumn("q_after", roundHalfUp(lit(qAfter), 6))
       .orderBy($"component")
       .localCheckpoint()
-    Seq(deg, lbl, cdeg, dic, winners, best,
-        binc, bstat, minc, mstat, edges)
-      .foreach(_.unpersist(false))
+    cleanup.foreach(_.unpersist(false))
     out
     }
   }
 
   /** Second Louvain phase — community refinement CONTINUES past the
-    * round-12 move round: phase 1's accepted partition (re-derived by
-    * [[louvainPhase1Labels]], the same arithmetic the step op gates)
-    * becomes the base, and the ODD color moves through the
-    * general-base machinery ([[louvainGeneralPhase]]) the singleton
-    * phase specialized away — per-(node, community) edge folds, the
-    * full textbook gain, and the exact-integer Q gate. `q_before`
-    * here equals `graph_louvain_step`'s `q_after` (spec-pinned
-    * continuity), so the two ops read as one trajectory.
+    * first move round: phase 1's accepted partition (rendered by
+    * [[louvainPhase1Labels]] from the step op's own round and gate)
+    * becomes the base, and the ODD color moves through
+    * [[louvainGeneralPhase]] — one [[louvainMoveBest]] round, the
+    * multi-level loop's own kernel, then the exact-integer Q gate.
+    * `q_before` here equals `graph_louvain_step`'s `q_after`
+    * (spec-pinned continuity), so the two ops read as one trajectory.
     *
     * Scale: d_ic is one edge⋈label keyed fold; gains join that frame
-    * against ≤|communities| degree rows; every window is keyed
-    * (node / target / source community); the Q integers are two label
-    * joins + one-row folds — the `graph_modularity` shape. Nothing
-    * touches N². */
+    * against ≤|communities| degree rows; every argmax is a keyed
+    * max_by (node / target / source community); the Q integers are
+    * two label joins + one-row folds — the `graph_modularity` shape.
+    * Nothing touches N². */
   private def graphLouvainStep2(s: SparkSession, d: String) = {
     val edges = coOrderEdges(s, d).cache()
     louvainGeneralPhase(s, edges, louvainPhase1Labels(s, edges),
@@ -1188,11 +1133,11 @@ object Graph {
   /** The accepted MOVE SET of one weighted general Louvain round over
     * `(src, dst, w)` edges (self-loops carry contracted communities'
     * internal weight) against `base` labels — the unit the multi-level
-    * loop chains. Same algebra as [[louvainGeneralPhase]] with
-    * `COUNT(*)` generalized to `SUM(w)` and d_ic excluding self-loops
-    * (a mover's self-loop moves WITH it, so it cancels out of the gain
-    * and of the global Σin_c delta — the derivation in the
-    * [[graphLouvain]] scaladoc). Entirely LAZY: no action runs here.
+    * loop chains, and the movers of [[louvainGeneralPhase]] (unit
+    * weights, level 1). d_ic excludes self-loops (a mover's self-loop
+    * moves WITH it, so it cancels out of the gain and of the global
+    * Σin_c delta — the derivation in the [[graphLouvain]] scaladoc).
+    * Entirely LAZY: no action runs here.
     *
     * The per-round Q gate the oracle renders is PROVABLY always-accept
     * for this pipeline: capacity-1 + source/target disjointness make
@@ -1313,8 +1258,8 @@ object Graph {
       wedges1: DataFrame, deg1: DataFrame, m: Long,
       gate: SmallData.Gate, cleanup: () => Unit)
 
-  /** The full multi-level loop as a spec-drivable hook: returns the
-    * composed per-ORIGINAL-node labels (LAZY — the caller's output
+  /** The full multi-level loop as a spec-drivable hook: its
+    * [[LouvainRun]] carries the composed per-ORIGINAL-node labels (LAZY — the caller's output
     * action materializes it from the filled caches), the per-level Q
     * values (the running gate integers rendered once per level), the
     * per-level accepted move counts, and a cleanup thunk the caller
@@ -1341,15 +1286,9 @@ object Graph {
     * `level1Base` (the [[graphLouvainStore]] path) starts level 1
     * from an existing partition — e.g. the persisted phase-1 label
     * store — instead of singletons; its init rows then fold ib₀/sb₀
-    * over the base labels (two extra keyed folds, same stats job). */
-  private[graft] def louvainMultiLevel(s: SparkSession, edges0: DataFrame,
-      level1Base: Option[DataFrame] = None)
-      : (DataFrame, Seq[Double], Seq[Long], () => Unit) = {
-    val r = louvainMultiLevelRun(s, edges0, level1Base)
-    (r.labels, r.qLevels, r.moves, r.cleanup)
-  }
-
-  /** `refineLevels = true` runs the FULL LEIDEN cycle (Traag, Waltman
+    * over the base labels (two extra keyed folds, same stats job).
+    *
+    * `refineLevels = true` runs the FULL LEIDEN cycle (Traag, Waltman
     * & van Eck 2019, arXiv:1810.08473 §A) instead of plain Louvain:
     * after each level's gated move rounds, the partition REFINES into
     * its connected fragments (EXACT per-community union-find —
@@ -1382,17 +1321,6 @@ object Graph {
     // Contracted levels shrink the graph, so their partition counts
     // shrink too (¼ per level, floored at 1).
     val m = edges0.count()
-    // GRAFT_LOUV_TRACE=1: force-materialize at phase boundaries and
-    // print wall-clock deltas (local diagnosis only; perturbs the lazy
-    // staging, so never on in benchmarked runs).
-    val trace = sys.env.get("GRAFT_LOUV_TRACE").contains("1")
-    var traceT0 = System.nanoTime()
-    def tr(tag: String, df: DataFrame = null): Unit = if (trace) {
-      if (df != null) df.count()
-      val t1 = System.nanoTime()
-      println(f"    [louv] $tag%-28s ${(t1 - traceT0) / 1e9}%7.3f s")
-      traceT0 = t1
-    }
     val nPart = SmallData.graphPartitions(s, m)
     def nPartAt(level: Int): Int = math.max(4, nPart >> (level - 1))
     val g = SmallData.louvain(s, m)
@@ -1482,7 +1410,6 @@ object Graph {
           coalesce(sum(lit(2L) * $"k" * ($"deg_b" - $"deg_a") +
             lit(2L) * $"k" * $"k"), lit(0L))).head
         levelMoves += r.getLong(0); ib += r.getLong(1); sb += r.getLong(2)
-        tr(s"L$level round$round gate")
         // movers-only best rides map-side into the ladder join below
         // the small-graph gate: both sides are stats-free staged
         // leaves, so the static plan inside the NEXT round's broadcast
@@ -1520,7 +1447,6 @@ object Graph {
             .agg(sum($"w").as("w"))
             .repartition(nPartAt(level + 1), $"src")
             .sortWithinPartitions($"src"))
-          tr(s"L$level contract", wedges)
         }
       } else {
         // LEIDEN refinement: split this level's communities into their
@@ -1561,7 +1487,6 @@ object Graph {
             $"dst".cast("long"))).as("es"))
           .select($"label", explode(expr("cc_fragments(es)")).as("f"))
           .select($"f.node".as("node"), $"f.flabel".as("flabel"), $"label"))
-        tr(s"L$level fragRows", fragRows)
         val frag = fragRows.select($"node", $"flabel")
         perLevelLabels += frag.select($"node", $"flabel".as("label"))
         val fragS = mapSide(frag.select($"node".as("src"), $"flabel".as("fs")))
@@ -1576,11 +1501,9 @@ object Graph {
             .join(fragS, "src").join(fragD, "dst")
             .filter($"fs" === $"fd")
             .agg(coalesce(sum($"w"), lit(0L))).head.getLong(0)
-          tr("ibF")
           sbF = frag.join(deg, "node")
             .groupBy($"flabel").agg(sum($"k").as("ds"))
             .agg(coalesce(sum($"ds" * $"ds"), lit(0L))).head.getLong(0)
-          tr("sbF")
         } else {
           // Fragment contraction: map-side attach both ends, then ONE
           // (fs, fd) combine — the partial (dst, fs) pre-combine only
@@ -1597,7 +1520,6 @@ object Graph {
             .agg(sum($"w").as("w"))
             .repartition(nPartAt(level + 1), $"src")
             .sortWithinPartitions($"src"))
-          tr(s"L$level frag-contract", wedges)
           // fragRows already pairs each fragment with its community —
           // the constrained re-seed needs no join back through lbl,
           // and no distinct: each fragment has exactly one root row
@@ -1685,12 +1607,8 @@ object Graph {
           .join(lbl.select($"node".as("dst"), $"label".as("ld")), "dst"))
       .filter($"ld" === $"ls")
       .groupBy($"ls".as("label")).agg(sum($"w").as("n_in"))
-    val base = dsum.join(inC, Seq("label"), "left")
-      .select($"label".as("component"), $"n_nodes",
-        coalesce($"n_in", lit(0L)).as("internal_edges"), $"degree_sum",
-        roundHalfUp(lit(1.0) * coalesce($"n_in", lit(0L)) / lit(run.m) -
-          (lit(1.0) * $"degree_sum" / lit(run.m)) *
-            (lit(1.0) * $"degree_sum" / lit(run.m)), 6).as("contribution"))
+    val base = communityStats(dsum.join(inC, Seq("label"), "left"),
+      lit(run.m))
     val out = run.qLevels.init.zipWithIndex
       .foldLeft(base) { case (df, (q, i)) =>
         df.withColumn(s"q_level${i + 1}", roundHalfUp(lit(q), 6))

@@ -1,22 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI driver for the loan ETL:
   * `runMain graft.pipeline.LoanPipelineMain <applications.csv> <lms.csv> <outDir>`
   * — the engine analogue of `python pipeline.py` in the reference. */
 object LoanPipelineMain {
   def main(args: Array[String]): Unit = {
     val Array(appsCsv, lmsCsv, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-loan-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession()
     val counts = LoanPipeline.run(spark, appsCsv, lmsCsv, outDir)
     println(s"[loan-pipeline] cleaned_applications=${counts("cleaned_applications")} " +
       s"loan_portfolio=${counts("loan_portfolio")} quarantined=${counts("quarantined")}")

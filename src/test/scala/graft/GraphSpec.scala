@@ -371,7 +371,8 @@ class GraphSpec extends SparkSpecBase {
     // the trace the multi-level loop exists for.
     val und = Seq((0L,1L),(0L,2L),(1L,2L),(3L,4L),(3L,5L),(4L,5L),(2L,3L))
     val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
-    val (lab, qs, moves, cleanup) = ops.Graph.louvainMultiLevel(spark, edges)
+    val ops.Graph.LouvainRun(lab, qs, moves, _, _, _, _, cleanup) =
+      ops.Graph.louvainMultiLevelRun(spark, edges)
     val part = lab.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     cleanup()
     assert(part.keySet === Set(0L, 1L, 2L, 3L, 4L, 5L))

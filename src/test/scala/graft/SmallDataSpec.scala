@@ -17,6 +17,7 @@ class SmallDataSpec extends SparkSpecBase {
     "graph_pagerank_converged",
     "graph_components",
     "graph_components_converged",
+    "graph_louvain_step",
     "graph_louvain_step2",
     "graph_louvain",
     "ann_ivf_kmeans_scalable",
