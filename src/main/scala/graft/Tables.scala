@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated parquet testdata (`TESTDATA.md`).
   *
@@ -35,18 +37,28 @@ object Tables {
     *     same micros value with zero offset (DuckDB reads the file
     *     natively, so oracle parity holds).
     *   - TIMESTAMP(NANOS) (older drops) — Spark 4 rejects it outright,
-    *     so read as a raw nanos long via the legacy conf and convert
+    *     so only then read it as a raw nanos long via the legacy conf
+    *     (left set: the scan reads it again at execution) and convert
     *     with integer division (`div`, not `/`: double division loses
     *     precision on ~1.7e18 nanos values; DuckDB truncates ns→µs the
     *     same way).
     * Branching on the footer type per load means one regenerated file
     * can't silently break every events-reading operator again. */
-  def events(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr}
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = load(s, d, "events")
-    raw.schema("ts").dataType match {
+  def events(s: SparkSession, d: String): DataFrame =
+    eventsVia(s, d)(s.read.schema(_).parquet(s"$d/events.parquet"))
+
+  /** [[events]] through any reader of the events file (batch or
+    * stream), given the file's schema. */
+  private[graft] def eventsVia(s: SparkSession, d: String)(
+      read: StructType => DataFrame): DataFrame = {
+    val path = s"$d/events.parquet"
+    val schema = try s.read.parquet(path).schema catch {
+      case e: Exception if String.valueOf(e.getMessage).contains("NANOS") =>
+        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        s.read.parquet(path).schema
+    }
+    val raw = read(schema)
+    schema("ts").dataType match {
       case LongType         => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
       case TimestampType    => raw

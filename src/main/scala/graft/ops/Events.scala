@@ -1204,26 +1204,15 @@ object Events {
        |CROSS JOIN n
        |ORDER BY type_a, type_b""".stripMargin
 
-  /** Streaming file source over the events table with `ts` normalized
-    * to TimestampType whatever the footer's physical type (legacy
-    * nanos long, NTZ micros, or already ltz — mirrors Tables.events;
-    * watermarks require TIMESTAMP, and the session TZ is pinned UTC so
-    * the NTZ cast is offset-free). */
-  private def streamingEvents(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$d/events.parquet").schema
-    // the source path is a single parquet FILE; a non-glob path makes
-    // FileStreamSource force basePath = the file itself (which it then
-    // rejects), so address it as a glob and the base stays the table dir
-    val raw = s.readStream.schema(schema).parquet(s"$d/{events.parquet}")
-    schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => raw
-    }
-  }
+  /** Streaming file source over the events table, `ts` normalized as
+    * in [[Tables.events]] (watermarks require TIMESTAMP). The
+    * source path is a single parquet FILE; a non-glob path makes
+    * FileStreamSource force basePath = the file itself (which it then
+    * rejects), so address it as a glob and the base stays the table
+    * dir. */
+  private def streamingEvents(s: SparkSession, d: String): DataFrame =
+    Tables.eventsVia(s, d)(
+      s.readStream.schema(_).parquet(s"$d/{events.parquet}"))
 
   /** Run a finite streaming query (AvailableNow) into a memory sink
     * and return the sink table.

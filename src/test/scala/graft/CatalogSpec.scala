@@ -20,14 +20,14 @@ class CatalogSpec extends SparkSpecBase {
     assert(missing.isEmpty, s"oracleSql without queries: $missing")
   }
 
-  for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
+  for (name <- SparkEntry.queries.keys.toSeq.sorted) {
     test(s"$name executes and is non-degenerate") {
-      val df = fn(spark, sf)
-      val n = df.count()
-      assert(df.columns.nonEmpty)
+      val r = CatalogRun(spark, sf, name)
+      assert(r.schema.nonEmpty)
       // Empty results are legal only for genuinely filtering ops; all
       // current catalog entries yield rows at sf0.001.
-      assert(n > 0, s"$name returned 0 rows at sf0.001")
+      assert(r.rows.nonEmpty, s"$name returned 0 rows at sf0.001")
+      assert(r.confDiff.isEmpty, s"$name changed the session conf: ${r.confDiff}")
     }
   }
 
@@ -42,7 +42,7 @@ class CatalogSpec extends SparkSpecBase {
 
   test("union_distinct result is within each input's distinct bound") {
     import spark.implicits._
-    val n = SparkEntry.queries("union_distinct")(spark, sf).count()
+    val n = CatalogRun.frame(spark, sf, "union_distinct").count()
     val cDist = Tables.customer(spark, sf).select($"c_nationkey").distinct().count()
     assert(n >= cDist && n <= 25)
   }
@@ -53,7 +53,7 @@ class CatalogSpec extends SparkSpecBase {
     // hour at spring-forward, repeated hour at fall-back), not a fixed
     // offset; render via date_format under the pinned UTC session TZ
     // so the assertion is JVM-default-timezone-proof
-    val r = SparkEntry.queries("fn_now_tz")(spark, sf)
+    val r = CatalogRun.frame(spark, sf, "fn_now_tz")
       .select(
         date_format($"dst_spring_pre", "yyyy-MM-dd HH:mm:ss"),
         date_format($"dst_spring_post", "yyyy-MM-dd HH:mm:ss"),
@@ -66,7 +66,7 @@ class CatalogSpec extends SparkSpecBase {
     assert(r.getString(3) === "2024-10-27 02:30:00") // CET +1: same wall time
     // per-event columns: berlin wall time is ts +1h or +2h, and the
     // anchor date is the Berlin-local calendar day
-    val badRows = SparkEntry.queries("fn_now_tz")(spark, sf)
+    val badRows = CatalogRun.frame(spark, sf, "fn_now_tz")
       .join(Tables.events(spark, sf).select($"event_id", $"ts"), "event_id")
       .filter(
         !(unix_timestamp($"ts_berlin") - unix_timestamp($"ts"))
@@ -78,7 +78,7 @@ class CatalogSpec extends SparkSpecBase {
 
   test("window_share shares sum to 1 within each month (non-null months)") {
     import spark.implicits._
-    val bad = SparkEntry.queries("window_share")(spark, sf)
+    val bad = CatalogRun.frame(spark, sf, "window_share")
       .groupBy($"cohort_month")
       .agg(sum($"monthly_share").as("s"))
       .filter($"s".isNotNull && abs($"s" - 1.0) > 0.01)
@@ -88,19 +88,19 @@ class CatalogSpec extends SparkSpecBase {
 
   test("agg_groupby totals reconcile with agg_global row count") {
     import spark.implicits._
-    val byGroup = SparkEntry.queries("agg_groupby")(spark, sf)
+    val byGroup = CatalogRun.frame(spark, sf, "agg_groupby")
       .agg(sum($"count_order")).first().getLong(0)
-    val global = SparkEntry.queries("agg_global")(spark, sf)
+    val global = CatalogRun.frame(spark, sf, "agg_global")
       .first().getAs[Long]("n_rows")
     assert(byGroup === global)
   }
 
   test("dedup_clusters labels exactly the docs of the simhash pair graph") {
     import spark.implicits._
-    val pairs = SparkEntry.queries("dedup_simhash")(spark, sf)
+    val pairs = CatalogRun.frame(spark, sf, "dedup_simhash")
     val inGraph = pairs.select($"doc_a".as("doc_id"))
       .union(pairs.select($"doc_b".as("doc_id"))).distinct().count()
-    val clusters = SparkEntry.queries("dedup_clusters")(spark, sf)
+    val clusters = CatalogRun.frame(spark, sf, "dedup_clusters")
     assert(clusters.count() === inGraph)
     // labels are canonical minimum ids: never larger than the member
     assert(clusters.filter($"cluster_id" > $"doc_id").count() === 0)
@@ -116,7 +116,7 @@ class CatalogSpec extends SparkSpecBase {
 
   test("limit_topk is the global descending head") {
     import spark.implicits._
-    val top = SparkEntry.queries("limit_topk")(spark, sf)
+    val top = CatalogRun.frame(spark, sf, "limit_topk")
       .agg(min($"o_totalprice")).first().getDouble(0)
     val above = Tables.orders(spark, sf).filter($"o_totalprice" > top).count()
     assert(above < 100)
@@ -124,14 +124,14 @@ class CatalogSpec extends SparkSpecBase {
 
   test("agg_bitmap_distinct bitmap count equals the exact count on every type") {
     import spark.implicits._
-    val bad = SparkEntry.queries("agg_bitmap_distinct")(spark, sf)
+    val bad = CatalogRun.frame(spark, sf, "agg_bitmap_distinct")
       .filter($"n_distinct_bitmap" =!= $"n_distinct_exact").count()
     assert(bad === 0)
   }
 
   test("events_seasonality shares sum to 1 within each type") {
     import spark.implicits._
-    val bad = SparkEntry.queries("events_seasonality")(spark, sf)
+    val bad = CatalogRun.frame(spark, sf, "events_seasonality")
       .groupBy($"event_type").agg(sum($"share").as("s"))
       .filter(abs($"s" - 1.0) > 0.01).count()
     assert(bad === 0)
@@ -139,7 +139,7 @@ class CatalogSpec extends SparkSpecBase {
 
   test("events_forecast forecasts are the lag-7 actuals where both days emit") {
     import spark.implicits._
-    val f = SparkEntry.queries("events_forecast")(spark, sf)
+    val f = CatalogRun.frame(spark, sf, "events_forecast")
     val misaligned = f.as("now").join(f.as("past"),
         $"now.event_type" === $"past.event_type" &&
           $"past.day" === date_sub($"now.day", 7))
@@ -149,7 +149,7 @@ class CatalogSpec extends SparkSpecBase {
 
   test("graph_similarity: ≤5 ranked rows per supplier, jaccard in (0,1]") {
     import spark.implicits._
-    val out = SparkEntry.queries("graph_similarity")(spark, sf).cache()
+    val out = CatalogRun.frame(spark, sf, "graph_similarity").cache()
     assert(out.filter($"rk" < 1 || $"rk" > 5).count() === 0)
     assert(out.filter($"jaccard" <= 0.0 || $"jaccard" > 1.0).count() === 0)
     val overfull = out.groupBy($"supplier").count().filter($"count" > 5).count()
@@ -159,7 +159,7 @@ class CatalogSpec extends SparkSpecBase {
 
   test("dedup_containment pairs are directed, scored in [0.9, 1]") {
     import spark.implicits._
-    val out = SparkEntry.queries("dedup_containment")(spark, sf).cache()
+    val out = CatalogRun.frame(spark, sf, "dedup_containment").cache()
     assert(out.filter($"doc_inner" === $"doc_outer").count() === 0)
     assert(out.filter($"containment" < 0.9 || $"containment" > 1.0).count() === 0)
     out.unpersist()
@@ -168,7 +168,7 @@ class CatalogSpec extends SparkSpecBase {
   test("text_boilerplate: untouched docs reassemble to their normalized text") {
     import spark.implicits._
     import graft.functions.TextFns.normalizeText
-    val out = SparkEntry.queries("text_boilerplate")(spark, sf).cache()
+    val out = CatalogRun.frame(spark, sf, "text_boilerplate").cache()
     assert(out.filter($"n_dropped" > $"n_blocks").count() === 0)
     val bad = out.filter($"n_dropped" === 0)
       .join(Tables.documents(spark, sf), "doc_id")
@@ -180,8 +180,8 @@ class CatalogSpec extends SparkSpecBase {
 
   test("ann_hybrid_rerank re-ranks within the BM25 candidate set") {
     import spark.implicits._
-    val hybrid = SparkEntry.queries("ann_hybrid_rerank")(spark, sf).cache()
-    val bm = SparkEntry.queries("rank_bm25")(spark, sf).select($"doc_id")
+    val hybrid = CatalogRun.frame(spark, sf, "ann_hybrid_rerank").cache()
+    val bm = CatalogRun.frame(spark, sf, "rank_bm25").select($"doc_id")
     assert(hybrid.join(bm, Seq("doc_id"), "left_anti").count() === 0)
     assert(hybrid.filter($"hybrid" < 0 || $"hybrid" > 1.000001).count() === 0)
     assert(hybrid.filter($"cosine" < -1.000001 || $"cosine" > 1.000001)
@@ -191,7 +191,7 @@ class CatalogSpec extends SparkSpecBase {
 
   test("mm_scene_cuts: first frame never cuts, energies are fractions") {
     import spark.implicits._
-    val out = SparkEntry.queries("mm_scene_cuts")(spark, sf).cache()
+    val out = CatalogRun.frame(spark, sf, "mm_scene_cuts").cache()
     assert(out.filter($"frame_no" === 0 && $"is_cut").count() === 0)
     assert(out.filter($"energy" < 0 || $"energy" > 1).count() === 0)
     assert(out.filter($"is_cut" && $"delta" <= 0.05).count() === 0)
@@ -205,7 +205,7 @@ class CatalogSpec extends SparkSpecBase {
     // the shape instead: one row per day, non-negative buckets, and
     // ONE positive integer band width shared by every day (the stated
     // error bound max(1, ceil(range/sqrt(N)))).
-    val out = SparkEntry.queries("sketch_rolling_quantile")(spark, sf).cache()
+    val out = CatalogRun.frame(spark, sf, "sketch_rolling_quantile").cache()
     assert(out.groupBy($"day").count().filter($"count" =!= 1).count() === 0)
     assert(out.filter($"p50_bucket" < 0).count() === 0)
     val widths = out.select(($"p50_hi" - $"p50_lo").as("w")).distinct().collect()
@@ -218,14 +218,14 @@ class CatalogSpec extends SparkSpecBase {
 
   test("mm_silence_segments are contiguous frame runs") {
     import spark.implicits._
-    val out = SparkEntry.queries("mm_silence_segments")(spark, sf)
+    val out = CatalogRun.frame(spark, sf, "mm_silence_segments")
     assert(out.filter($"n_frames" =!= $"seg_end" - $"seg_start" + 1)
       .count() === 0)
   }
 
   test("events_abtest: conversions bounded by arm sizes, arms partition users") {
     import spark.implicits._
-    val out = SparkEntry.queries("events_abtest")(spark, sf).cache()
+    val out = CatalogRun.frame(spark, sf, "events_abtest").cache()
     assert(out.filter($"conv_a" > $"n_a" || $"conv_b" > $"n_b").count() === 0)
     val Row(na: Long, nb: Long) = out.select($"n_a", $"n_b").first()
     val users = Tables.events(spark, sf)
@@ -236,7 +236,7 @@ class CatalogSpec extends SparkSpecBase {
 
   test("corpus_token_budget: under budget, nearly full, quality-prefix") {
     import spark.implicits._
-    val sel = SparkEntry.queries("corpus_token_budget")(spark, sf).cache()
+    val sel = CatalogRun.frame(spark, sf, "corpus_token_budget").cache()
     val docs = Tables.documents(spark, sf)
       .select(size(split(trim(regexp_replace(lower($"text"), "\\s+", " ")), " "))
         .cast("long").as("n"))
@@ -259,7 +259,7 @@ class CatalogSpec extends SparkSpecBase {
 
   test("text_entropy bounded by log2(26), keep gate consistent") {
     import spark.implicits._
-    val out = SparkEntry.queries("text_entropy")(spark, sf).cache()
+    val out = CatalogRun.frame(spark, sf, "text_entropy").cache()
     assert(out.filter($"entropy" < 0 || $"entropy" > 4.700440).count() === 0)
     assert(out.filter($"keep" =!= ($"entropy" >= 3.0)).count() === 0)
     out.unpersist()
@@ -267,7 +267,7 @@ class CatalogSpec extends SparkSpecBase {
 
   test("events_gini: shares ordered, coefficient in [0, 1)") {
     import spark.implicits._
-    val r = SparkEntry.queries("events_gini")(spark, sf).first()
+    val r = CatalogRun.frame(spark, sf, "events_gini").first()
     val gini = r.getAs[Double]("gini")
     val t1 = r.getAs[Double]("top1pct_share")
     val t10 = r.getAs[Double]("top10pct_share")
@@ -279,7 +279,7 @@ class CatalogSpec extends SparkSpecBase {
 
   test("layout_zonemap: sorted layout prunes, ingest layout cannot") {
     import spark.implicits._
-    val m = SparkEntry.queries("layout_zonemap")(spark, sf)
+    val m = CatalogRun.frame(spark, sf, "layout_zonemap")
       .collect().map(r => r.getAs[String]("layout") ->
         r.getAs[Double]("avg_files_hit")).toMap
     assert(m("sorted") === 1.0, m)
@@ -288,8 +288,8 @@ class CatalogSpec extends SparkSpecBase {
 
   test("events_paths: shares are session fractions over the session universe") {
     import spark.implicits._
-    val paths = SparkEntry.queries("events_paths")(spark, sf).cache()
-    val nSessions = SparkEntry.queries("event_sessions")(spark, sf).count()
+    val paths = CatalogRun.frame(spark, sf, "events_paths").cache()
+    val nSessions = CatalogRun.frame(spark, sf, "event_sessions").count()
     val covered = paths.agg(sum($"n_sessions")).first().getLong(0)
     assert(covered <= nSessions)
     assert(paths.filter($"share" <= 0 || $"share" > 1).count() === 0)
@@ -299,7 +299,7 @@ class CatalogSpec extends SparkSpecBase {
 
   test("corpus_source_overlap: canonical pairs, jaccard within (0,1]") {
     import spark.implicits._
-    val out = SparkEntry.queries("corpus_source_overlap")(spark, sf).cache()
+    val out = CatalogRun.frame(spark, sf, "corpus_source_overlap").cache()
     assert(out.filter($"source_a" >= $"source_b").count() === 0)
     assert(out.filter($"jaccard" <= 0 || $"jaccard" > 1).count() === 0)
     assert(out.filter($"common" > 100).count() === 0)
@@ -308,7 +308,7 @@ class CatalogSpec extends SparkSpecBase {
 
   test("events_concurrency peak never exceeds that day's session count") {
     import spark.implicits._
-    val bad = SparkEntry.queries("events_concurrency")(spark, sf)
+    val bad = CatalogRun.frame(spark, sf, "events_concurrency")
       .filter($"peak_concurrent" < 1 || $"peak_concurrent" > $"n_sessions")
       .count()
     assert(bad === 0)

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import ops.SmallData
 
 /** Degenerate-input robustness: every catalog query must run (not
   * throw) against ZERO-ROW versions of every table — the shape of an
@@ -13,11 +14,13 @@ class EmptyInputSpec extends SparkSpecBase {
   private lazy val emptyDir: String = {
     val dir = Files.createTempDirectory("graft_empty_").toString
     // events must keep its raw INT64-nanos ts column (the loader does
-    // the nanos→micros conversion itself)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    for (t <- Tables.names) {
-      spark.read.parquet(s"$sf/$t.parquet").limit(0)
-        .write.mode("overwrite").parquet(s"$dir/$t.parquet")
+    // the nanos→micros conversion itself); the conf is scoped to the
+    // copy so it cannot mask a loader that leaks it
+    SmallData.withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
+      for (t <- Tables.names) {
+        spark.read.parquet(s"$sf/$t.parquet").limit(0)
+          .write.mode("overwrite").parquet(s"$dir/$t.parquet")
+      }
     }
     dir
   }

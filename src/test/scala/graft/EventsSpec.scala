@@ -14,6 +14,24 @@ import org.apache.spark.sql.types._
   */
 class EventsSpec extends SparkSpecBase {
 
+  test("events over a TIMESTAMP(NANOS) file reads ts as micros = nanos div 1000") {
+    // src/test/resources/nanosfix (FIXTURES.md): the legacy footer type
+    // that the sf testdata no longer ships; the loader must take its
+    // nanosAsLong branch only here, from a session that has it off
+    val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+    val dir = getClass.getResource("/nanosfix").getPath
+    val nanos = Seq(1700000000123456789L, 1700000001000000999L,
+      1700086400999999000L, 1704067200000000001L)
+    ops.SmallData.withConf(spark, nanosAsLong -> "false") {
+      val ev = Tables.events(spark, dir)
+      assert(spark.conf.get(nanosAsLong) === "true")
+      assert(ev.schema("ts").dataType === TimestampType)
+      val micros = ev.orderBy("event_id")
+        .selectExpr("unix_micros(ts)").collect().map(_.getLong(0)).toSeq
+      assert(micros === nanos.map(_ / 1000))
+    }
+  }
+
   test("ewma folds power-of-two weights over the trailing frame exactly") {
     import spark.implicits._
     // values 1, 2, 4 → ewma3 = (1·¼ + 2·½ + 4·1) / (¼ + ½ + 1) = 3.0

@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
 class GraphLeidenSpec extends SparkSpecBase {
 
   test("q_final beats louvain's at equal bounds; level-1 trace identical") {
-    val le = SparkEntry.queries("graph_leiden")(spark, sf)
+    val le = CatalogRun.frame(spark, sf, "graph_leiden")
       .select("q_level1", "q_level2", "q_level3", "q_final").head
-    val lo = SparkEntry.queries("graph_louvain")(spark, sf)
+    val lo = CatalogRun.frame(spark, sf, "graph_louvain")
       .select("q_level1", "q_level2", "q_final").head
     assert(le.getDouble(0) === lo.getDouble(0),
       "level 1 is the same gated singleton phase in both algorithms")
@@ -36,7 +36,7 @@ class GraphLeidenSpec extends SparkSpecBase {
   }
 
   test("stats are the graph_louvain fold over the leiden partition") {
-    val out = SparkEntry.queries("graph_leiden")(spark, sf).cache()
+    val out = CatalogRun.frame(spark, sf, "graph_leiden").cache()
     // per-community contribution sums to q_final (quantization slack)
     val sum = out.agg(org.apache.spark.sql.functions.sum(col("contribution")))
       .head.getDouble(0)

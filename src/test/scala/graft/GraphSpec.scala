@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class GraphSpec extends SparkSpecBase {
 
   test("pagerank conserves rank mass on the dangling-free co-order graph") {
-    val pr = SparkEntry.queries("graph_pagerank")(spark, sf)
+    val pr = CatalogRun.frame(spark, sf, "graph_pagerank")
     val row = pr.agg(
       sum(col("pr")).as("mass"),
       min(col("pr")).as("lo"),
@@ -54,7 +54,7 @@ class GraphSpec extends SparkSpecBase {
     // suppliers serve many customers (dense side of the bipartite
     // graph), so the mean supplier rank must exceed the mean customer
     // rank — the qualitative property PageRank exists to measure.
-    val pr = SparkEntry.queries("graph_pagerank")(spark, sf)
+    val pr = CatalogRun.frame(spark, sf, "graph_pagerank")
     val means = pr.groupBy(col("node_type")).agg(avg(col("pr")).as("m"))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(means("supplier") > means("customer"), means.toString)
@@ -62,7 +62,7 @@ class GraphSpec extends SparkSpecBase {
 
   test("components: labels are min-reachable ids and edges connect same-component nodes") {
     import spark.implicits._
-    val comp = SparkEntry.queries("graph_components")(spark, sf)
+    val comp = CatalogRun.frame(spark, sf, "graph_components")
       .select(
         when($"node_type" === "customer", $"node_key" * 2)
           .otherwise($"node_key" * 2 + 1).as("node"),
@@ -89,7 +89,7 @@ class GraphSpec extends SparkSpecBase {
 
   test("sssp: seeds at 0, hops bounded, triangle inequality holds per edge") {
     import spark.implicits._
-    val dist = SparkEntry.queries("graph_sssp")(spark, sf)
+    val dist = CatalogRun.frame(spark, sf, "graph_sssp")
       .select(
         when($"node_type" === "customer", $"node_key" * 2)
           .otherwise($"node_key" * 2 + 1).as("node"),
@@ -150,7 +150,7 @@ class GraphSpec extends SparkSpecBase {
     // compare collected sets: an exceptAll over the two UNROLLED
     // iteration plans builds a plan string big enough to OOM the test
     // JVM (the results are a few hundred rows at sf0.001)
-    def rows(name: String) = SparkEntry.queries(name)(spark, sf)
+    def rows(name: String) = CatalogRun.frame(spark, sf, name)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(rows("graph_components") === rows("graph_components_converged"),
       "CcRounds covers this graph's diameter, so the two must agree")
@@ -176,7 +176,7 @@ class GraphSpec extends SparkSpecBase {
 
   test("kcore: the testdata fixpoint lands strictly inside the round bound") {
     import org.apache.spark.sql.functions._
-    val rep = SparkEntry.queries("graph_kcore")(spark, sf)
+    val rep = CatalogRun.frame(spark, sf, "graph_kcore")
     val maxRound = rep.agg(max(col("peeled_round"))).head().getInt(0)
     assert(maxRound < ops.Graph.PeelRoundsForSpec,
       s"a node peeled in the last round ($maxRound) — raise PeelRounds")
@@ -217,7 +217,7 @@ class GraphSpec extends SparkSpecBase {
   }
 
   test("converged pagerank: tolerance stops inside the bound, mass conserved") {
-    val pr = SparkEntry.queries("graph_pagerank_converged")(spark, sf).cache()
+    val pr = CatalogRun.frame(spark, sf, "graph_pagerank_converged").cache()
     val rounds = pr.agg(max(col("rounds_run"))).head().getInt(0)
     assert(rounds < ops.Graph.PrMaxRoundsForSpec,
       s"tolerance never hit inside the bound ($rounds) — raise PrMaxRounds")
@@ -280,7 +280,7 @@ class GraphSpec extends SparkSpecBase {
 
   test("graph_modularity catalog rows: Q in [-1, 1], counts consistent") {
     import spark.implicits._
-    val out = SparkEntry.queries("graph_modularity")(spark, sf).cache()
+    val out = CatalogRun.frame(spark, sf, "graph_modularity").cache()
     val q = out.agg(sum("contribution")).head.getDouble(0)
     assert(q >= -1.0 - 1e-9 && q <= 1.0 + 1e-9, s"Q = $q out of range")
     assert(out.filter(col("internal_edges") > col("degree_sum")).count() === 0,
@@ -309,20 +309,20 @@ class GraphSpec extends SparkSpecBase {
 
   test("louvain step on the corpus: Q non-decreasing, nodes conserved") {
     import spark.implicits._
-    val out = SparkEntry.queries("graph_louvain_step")(spark, sf).cache()
+    val out = CatalogRun.frame(spark, sf, "graph_louvain_step").cache()
     val qs = out.select("q_before", "q_after").distinct().collect()
     assert(qs.length === 1, "q scalars must be constant across rows")
     assert(qs.head.getDouble(1) >= qs.head.getDouble(0),
       "the gate must never commit a Q-decreasing round")
     // node conservation vs the raw co-order node set
-    val comps = SparkEntry.queries("graph_components")(spark, sf)
+    val comps = CatalogRun.frame(spark, sf, "graph_components")
     assert(out.agg(sum("n_nodes")).head.getLong(0) === comps.count())
     assert(out.filter(col("internal_edges") > col("degree_sum")).count() === 0)
   }
 
   test("personalized pagerank: mass 1, seed floor, seed concentration") {
     import spark.implicits._
-    val pr = SparkEntry.queries("graph_pagerank_personalized")(spark, sf)
+    val pr = CatalogRun.frame(spark, sf, "graph_pagerank_personalized")
       .cache()
     val nSeeds = pr.filter(col("is_seed")).count()
     assert(nSeeds > 0, "hash slice produced no seeds — widen the modulus")
@@ -390,7 +390,7 @@ class GraphSpec extends SparkSpecBase {
 
   test("multi-level louvain on the corpus: monotone Q, continuity, conservation") {
     import spark.implicits._
-    val out = SparkEntry.queries("graph_louvain")(spark, sf).cache()
+    val out = CatalogRun.frame(spark, sf, "graph_louvain").cache()
     val q = out.select("q_level1", "q_level2", "q_final").distinct().collect()
     assert(q.length === 1, "level Q scalars must be constant across rows")
     val (q1, q2, qf) =
@@ -400,11 +400,11 @@ class GraphSpec extends SparkSpecBase {
     // level 1 IS the step1+step2 trajectory (parity 0 then 1 from
     // singletons), so its Q must land exactly on step2's q_after —
     // the cross-op continuity pin
-    val s2 = SparkEntry.queries("graph_louvain_step2")(spark, sf)
+    val s2 = CatalogRun.frame(spark, sf, "graph_louvain_step2")
       .select("q_after").distinct().head.getDouble(0)
     assert(q1 === s2,
       s"q_level1 ($q1) must equal graph_louvain_step2's q_after ($s2)")
-    val comps = SparkEntry.queries("graph_components")(spark, sf)
+    val comps = CatalogRun.frame(spark, sf, "graph_components")
     assert(out.agg(sum("n_nodes")).head.getLong(0) === comps.count())
     assert(out.filter(col("internal_edges") > col("degree_sum")).count() === 0)
     out.unpersist()
@@ -412,7 +412,7 @@ class GraphSpec extends SparkSpecBase {
 
   test("store-fed multi-level louvain: refines past the stored phase-1 partition") {
     import spark.implicits._
-    val out = SparkEntry.queries("graph_louvain_store")(spark, sf).cache()
+    val out = CatalogRun.frame(spark, sf, "graph_louvain_store").cache()
     val q = out.select("q_level1", "q_level2", "q_final").distinct().collect()
     assert(q.length === 1, "level Q scalars must be constant across rows")
     val (q1, q2, qf) =
@@ -422,11 +422,11 @@ class GraphSpec extends SparkSpecBase {
     // level 1 here = phase-1 store + BOTH parity rounds, a superset of
     // step2's single odd round from the same base — gated rounds never
     // lose Q, so q_level1 must be at least step2's q_after
-    val s2 = SparkEntry.queries("graph_louvain_step2")(spark, sf)
+    val s2 = CatalogRun.frame(spark, sf, "graph_louvain_step2")
       .select("q_after").distinct().head.getDouble(0)
     assert(q1 >= s2 - 1e-12,
       s"store-fed q_level1 ($q1) must not fall below step2 q_after ($s2)")
-    val comps = SparkEntry.queries("graph_components")(spark, sf)
+    val comps = CatalogRun.frame(spark, sf, "graph_components")
     assert(out.agg(sum("n_nodes")).head.getLong(0) === comps.count(),
       "every original node must land in exactly one community")
     assert(out.filter(col("internal_edges") > col("degree_sum")).count() === 0)
@@ -435,9 +435,9 @@ class GraphSpec extends SparkSpecBase {
 
   test("louvain step2 on the corpus: continues step 1's trajectory") {
     import spark.implicits._
-    val s1 = SparkEntry.queries("graph_louvain_step")(spark, sf)
+    val s1 = CatalogRun.frame(spark, sf, "graph_louvain_step")
       .select("q_before", "q_after").distinct().head
-    val s2q = SparkEntry.queries("graph_louvain_step2")(spark, sf).cache()
+    val s2q = CatalogRun.frame(spark, sf, "graph_louvain_step2").cache()
     val s2 = s2q.select("q_before", "q_after").distinct().collect()
     assert(s2.length === 1)
     assert(s2.head.getDouble(0) === s1.getDouble(1),
@@ -445,7 +445,7 @@ class GraphSpec extends SparkSpecBase {
     assert(s2.head.getDouble(1) >= s2.head.getDouble(0),
       "the gate must never commit a Q-decreasing phase")
     // node conservation through both phases
-    val comps = SparkEntry.queries("graph_components")(spark, sf)
+    val comps = CatalogRun.frame(spark, sf, "graph_components")
     assert(s2q.agg(sum("n_nodes")).head.getLong(0) === comps.count())
     assert(s2q.filter(col("internal_edges") > col("degree_sum")).count() === 0)
     s2q.unpersist()
@@ -486,17 +486,17 @@ class GraphSpec extends SparkSpecBase {
   test("incremental pagerank on the corpus: warm rounds beat the cold start") {
     import spark.implicits._
     val inc =
-      SparkEntry.queries("graph_pagerank_incremental")(spark, sf).cache()
+      CatalogRun.frame(spark, sf, "graph_pagerank_incremental").cache()
     val rounds = inc.select("rounds_store", "rounds_warm").distinct().collect()
     assert(rounds.length === 1, "round counts must be constant across rows")
     val (rStore, rWarm) = (rounds.head.getInt(0), rounds.head.getInt(1))
-    val cold = SparkEntry.queries("graph_pagerank_converged")(spark, sf)
+    val cold = CatalogRun.frame(spark, sf, "graph_pagerank_converged")
       .select("rounds_run").head.getInt(0)
     assert(rWarm >= 1 && rWarm < cold,
       s"warm start ($rWarm) must re-converge in fewer rounds than cold ($cold)")
     assert(rStore >= 1 && rStore < ops.Graph.PrMaxRoundsForSpec)
     // the warm fixpoint covers exactly the full co-order node set
-    val coldN = SparkEntry.queries("graph_pagerank_converged")(spark, sf).count()
+    val coldN = CatalogRun.frame(spark, sf, "graph_pagerank_converged").count()
     assert(inc.count() === coldN)
     // mass = 1 + damped excess from store-unseen nodes (uniform init);
     // on this corpus every node appears in some old order, so the

@@ -21,8 +21,8 @@ class LouvainStoreSpec extends SparkSpecBase {
   }
 
   test("store-fed phase 2 equals the in-query op row for row") {
-    val inQuery = SparkEntry.queries("graph_louvain_step2")(spark, sf)
-    val fromStore = SparkEntry.queries("graph_louvain_step2_store")(spark, sf)
+    val inQuery = CatalogRun.frame(spark, sf, "graph_louvain_step2")
+    val fromStore = CatalogRun.frame(spark, sf, "graph_louvain_step2_store")
     assert(fromStore.count() === inQuery.count())
     assert(fromStore.exceptAll(inQuery).isEmpty &&
       inQuery.exceptAll(fromStore).isEmpty)
@@ -47,13 +47,13 @@ class LouvainStoreSpec extends SparkSpecBase {
     val out = ops.Graph.louvainGeneralPhase(spark,
       ops.Graph.coOrderEdges(spark, sf).cache(),
       spark.read.parquet(dir), moverParity = 1)
-    val clean = SparkEntry.queries("graph_louvain_step2")(spark, sf)
+    val clean = CatalogRun.frame(spark, sf, "graph_louvain_step2")
     assert(out.exceptAll(clean).count() > 0,
       "tampering with the store must change the phase-2 output")
   }
 
   test("the label-store op emits the persisted rows in node order") {
-    val out = SparkEntry.queries("graph_louvain_label_store")(spark, sf)
+    val out = CatalogRun.frame(spark, sf, "graph_louvain_label_store")
     val nodes = out.select(col("node")).collect().map(_.getLong(0))
     assert(nodes.sameElements(nodes.sorted))
     assert(out.columns.toSeq === Seq("node", "label"))

@@ -1,5 +1,7 @@
 package graft
 
+import org.scalatest.BeforeAndAfterAll
+
 /** Enforced plan hygiene: the properties `graft.PlanAudit` reports,
   * pinned as tests so a plan regression (a lost pushdown, a surprise
   * cartesian product, a missed group-limit) fails the build instead of
@@ -30,17 +32,19 @@ package graft
   * (`sample_reservoir`, `text_vocab_coverage`, `agg_countmin`) — the
   * dedicated tests below pin those.
   */
-class PlanSpec extends SparkSpecBase {
+class PlanSpec extends SparkSpecBase with BeforeAndAfterAll {
+
+  // Ops leave frames cached (e.g. the normalized embeddings), and a
+  // cached frame's stats feed later plans' join choices: the pinned
+  // plans below are those built over an empty cache.
+  override def beforeAll(): Unit = spark.catalog.clearCache()
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
   test("no catalog query plans a cartesian product") {
-    val offenders = SparkEntry.queries.keys.toSeq.sorted.filter { name =>
-      val p = plan(name)
-      spark.catalog.clearCache()
-      p.contains("CartesianProduct")
-    }
+    val offenders = SparkEntry.queries.keys.toSeq.sorted
+      .filter(CatalogRun(spark, sf, _).plan.contains("CartesianProduct"))
     assert(offenders.isEmpty, s"cartesian products in: $offenders")
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import ops.SmallData
+import org.apache.spark.sql.Row
 
 /** Both sides of the small-data gate ([[ops.SmallData]]). The testdata
   * is far below every threshold, so the catalog and the oracle only
@@ -26,10 +27,19 @@ class SmallDataSpec extends SparkSpecBase {
     "ann_graph_search",
     "ann_hnsw")
 
-  private def rowsOf(key: String): Seq[String] = {
+  private def render(rows: Seq[Row]): Seq[String] = rows.map(_.toString).sorted
+
+  /** The below-gate side is the key's shared catalog run. */
+  private def smallRowsOf(key: String): Seq[String] = {
+    val r = CatalogRun(spark, sf, key)
+    assert(r.confDiff.isEmpty, s"$key changed the session conf: ${r.confDiff}")
+    render(r.rows)
+  }
+
+  /** The forced-large side is its own run. */
+  private def largeRowsOf(key: String): Seq[String] = SmallData.forcingLarge {
     val before = spark.conf.getAll
-    val rows = SparkEntry.queries(key)(spark, sf).collect()
-      .map(_.toString).sorted.toSeq
+    val rows = render(SparkEntry.queries(key)(spark, sf).collect().toSeq)
     assert(spark.conf.getAll === before, s"$key changed the session conf")
     spark.catalog.clearCache()
     rows
@@ -49,8 +59,8 @@ class SmallDataSpec extends SparkSpecBase {
 
   for (key <- gatedKeys)
     test(s"$key returns the same rows above the gate as below it") {
-      val small = rowsOf(key)
-      val large = SmallData.forcingLarge(rowsOf(key))
+      val small = smallRowsOf(key)
+      val large = largeRowsOf(key)
       assert(small.nonEmpty, s"$key returned no rows")
       assert(large === small)
     }
