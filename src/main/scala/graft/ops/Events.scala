@@ -1331,16 +1331,14 @@ object Events {
     * sealed-window cutoff applies. */
   /** Streaming DOCUMENTS source — the crawl-stream analogue of
     * [[streamingEvents]] (same single-file-as-glob addressing). */
-  private def streamingDocuments(s: SparkSession, d: String): DataFrame = {
-    val schema = s.read.parquet(s"$d/documents.parquet").schema
-    s.readStream.schema(schema).parquet(s"$d/{documents.parquet}")
-  }
+  private def streamingDocuments(s: SparkSession, d: String): DataFrame =
+    s.readStream.schema(Tables.schemaOf(s, s"$d/documents.parquet"))
+      .parquet(s"$d/{documents.parquet}")
 
   /** Streaming EMBEDDINGS source — the vector-ingest analogue. */
-  private def streamingEmbeddings(s: SparkSession, d: String): DataFrame = {
-    val schema = s.read.parquet(s"$d/embeddings.parquet").schema
-    s.readStream.schema(schema).parquet(s"$d/{embeddings.parquet}")
-  }
+  private def streamingEmbeddings(s: SparkSession, d: String): DataFrame =
+    s.readStream.schema(Tables.schemaOf(s, s"$d/embeddings.parquet"))
+      .parquet(s"$d/{embeddings.parquet}")
 
   /** Oracle-gated run of the stream-static SEMANTIC decontamination
     * gate ([[graft.streaming.EventStream.semanticMatches]]): arriving

@@ -70,11 +70,12 @@ object Sources {
   private def ctasStage(s: SparkSession, d: String) = {
     import s.implicits._
     val stagePath = s"$tmpRoot/stage_cust_per_nation"
-    Tables.customer(s, d)
+    val perNation = Tables.customer(s, d)
       .groupBy($"c_nationkey")
       .agg(count(lit(1)).as("n_customers"))
-      .write.mode(SaveMode.Overwrite).parquet(stagePath)
-    val stage = s.read.parquet(stagePath)
+    perNation.write.mode(SaveMode.Overwrite).parquet(stagePath)
+    // read back with the written schema: no footer-inference job
+    val stage = s.read.schema(perNation.schema).parquet(stagePath)
     val nation = Tables.nation(s, d)
     stage.join(broadcast(nation), stage("c_nationkey") === nation("n_nationkey"))
       .select($"n_nationkey", $"n_name", $"n_customers")

@@ -4,6 +4,9 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.trees.TreeNode
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.types.StructType
 
 /** Each catalog key's result over a data dir (the specs' sf0.001),
@@ -20,9 +23,10 @@ import org.apache.spark.sql.types.StructType
   * failure and rethrown to every reader. */
 object CatalogRun {
 
-  /** One run of a key: the executed plan as built before the action,
-    * the collected result, and the session conf around the run. */
-  final case class Record(plan: String, schema: StructType, rows: Seq[Row],
+  /** One run of a key: whether the executed plan, as built before the
+    * action, holds a cartesian product; the collected result; and the
+    * session conf around the run. */
+  final case class Record(cartesian: Boolean, schema: StructType, rows: Seq[Row],
       confBefore: Map[String, String], confAfter: Map[String, String]) {
 
     /** Conf keys the run added, removed or changed, as `k: before -> after`. */
@@ -51,9 +55,20 @@ object CatalogRun {
     val before = spark.conf.getAll
     try {
       val df = SparkEntry.queries(key)(spark, sf)
-      val plan = df.queryExecution.executedPlan.toString
+      val cartesian = hasCartesian(df.queryExecution.executedPlan)
       val rows = df.collect().toSeq
-      Record(plan, df.schema, rows, before, spark.conf.getAll)
+      Record(cartesian, df.schema, rows, before, spark.conf.getAll)
     } finally spark.catalog.clearCache()
+  }
+
+  /** Whether `p` or any plan inside it is a [[CartesianProductExec]].
+    * Besides children the walk follows `innerChildren` (subqueries, a
+    * cached relation's plan) and the plans AQE holds outside the tree:
+    * its current plan and each query stage's plan. */
+  private def hasCartesian(p: TreeNode[_]): Boolean = p match {
+    case _: CartesianProductExec => true
+    case a: AdaptiveSparkPlanExec => hasCartesian(a.executedPlan)
+    case q: QueryStageExec => hasCartesian(q.plan)
+    case _ => (p.children ++ p.innerChildren).exists { case c: TreeNode[_] => hasCartesian(c) }
   }
 }

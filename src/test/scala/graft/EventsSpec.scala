@@ -29,6 +29,11 @@ class EventsSpec extends SparkSpecBase {
       val micros = ev.orderBy("event_id")
         .selectExpr("unix_micros(ts)").collect().map(_.getLong(0)).toSeq
       assert(micros === nanos.map(_ / 1000))
+      // a second load takes the footer from the schema cache, which
+      // must still set the conf the scan needs
+      spark.conf.set(nanosAsLong, "false")
+      assert(Tables.events(spark, dir).schema("ts").dataType === TimestampType)
+      assert(spark.conf.get(nanosAsLong) === "true")
     }
   }
 
