@@ -1214,28 +1214,46 @@ object Events {
     Tables.eventsVia(s, d)(
       s.readStream.schema(_).parquet(s"$d/{events.parquet}"))
 
+  /** The SQL confs every stream key runs under (restored after):
+    *   - the stateful-operator partition count, at most 8 and at most
+    *     one task wave: each micro-batch commits every state-store
+    *     partition across every stateful operator, so partitions here
+    *     price PER-BATCH overhead, not parallelism — state is keyed by
+    *     (window, …) groups whose cardinality is tiny next to the raw
+    *     stream. At production scale this is the
+    *     `spark.sql.shuffle.partitions` the streaming job is launched
+    *     with, sized to live-state volume, not to input volume;
+    *   - the FileSystem-based checkpoint manager for the offset/commit
+    *     logs, the file-source log and the state stores. Its rename is
+    *     `FileSystem.rename`; the default FileContext-based manager
+    *     goes through Hadoop's local FS, which without native IO forks
+    *     a `readlink` per rename and a `chmod` per create or mkdir
+    *     (236 forks per `stream_tumbling` run, most of them inside the
+    *     state-store commits). Both checksum layers (Hadoop `.crc`
+    *     files, Spark's checkpoint file checksums) stay on. */
+  private[graft] def streamConfs(s: SparkSession): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" ->
+      math.min(8, s.sparkContext.defaultParallelism).toString,
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+
   /** Run a finite streaming query (AvailableNow) into a memory sink
-    * and return the sink table.
-    *
-    * The stateful-operator partition count is pinned (for the stream
-    * only — restored after) well below the batch shuffle fan-out: each
-    * micro-batch commits every state-store partition across every
-    * stateful operator, so partitions here price PER-BATCH overhead,
-    * not parallelism — state is keyed by (window, …) groups whose
-    * cardinality is tiny next to the raw stream. At production scale
-    * this is the `spark.sql.shuffle.partitions` the streaming job is
-    * launched with, sized to live-state volume, not to input volume. */
+    * under [[streamConfs]] and return the sink's rows as a local
+    * frame with the sink's schema. The sink's temp view is dropped, so
+    * the query leaves no table in the session. */
   private def runStream(s: SparkSession, df: DataFrame, prefix: String,
                         mode: String): DataFrame = {
     val name = s"${prefix}_${streamRuns.incrementAndGet()}"
-    SmallData.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+    SmallData.withConf(s, streamConfs(s): _*) {
       df.writeStream.format("memory").queryName(name)
         .outputMode(mode)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
         .awaitTermination()
     }
-    s.table(name)
+    val sink = s.table(name)
+    try s.createDataFrame(sink.collectAsList(), sink.schema)
+    finally s.catalog.dropTempView(name)
   }
 
   private def streamTumbling(s: SparkSession, d: String) = {

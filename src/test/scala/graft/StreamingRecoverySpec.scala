@@ -19,7 +19,8 @@ import graft.streaming.EventStream
   */
 class StreamingRecoverySpec extends SparkSpecBase {
 
-  test("tumbling totals survive a stop/restart across file batches") {
+  /** The tumbling protocol, with both queries run under `confs`. */
+  private def tumblingRecovery(tag: String, confs: Seq[(String, String)]): Unit = {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_recovery").toString
     val srcDir = s"$base/src"
@@ -41,21 +42,22 @@ class StreamingRecoverySpec extends SparkSpecBase {
         .start()
     }
 
-    val q1 = startQuery("recovery_run1")
-    q1.processAllAvailable()
-    q1.stop()
+    val progress = ops.SmallData.withConf(spark, confs: _*) {
+      val q1 = startQuery(s"${tag}_run1")
+      q1.processAllAvailable()
+      q1.stop()
 
-    secondHalf.coalesce(1).write.mode("append").parquet(srcDir)
+      secondHalf.coalesce(1).write.mode("append").parquet(srcDir)
 
-    val q2 = startQuery("recovery_run2")
-    q2.processAllAvailable()
+      val q2 = startQuery(s"${tag}_run2")
+      q2.processAllAvailable()
+      try q2.recentProgress.map(_.numInputRows).sum finally q2.stop()
+    }
     // the restarted query must have scanned ONLY the new files
-    val progress = q2.recentProgress.map(_.numInputRows).sum
-    q2.stop()
     assert(progress === secondHalf.count(),
       s"restart re-read old files: $progress rows")
 
-    val got = spark.table("recovery_run2")
+    val got = spark.table(s"${tag}_run2")
     val want: DataFrame = events
       .groupBy(window($"ts", "1 hour"), $"event_type")
       .agg(count(lit(1)).as("n_events"),
@@ -66,6 +68,16 @@ class StreamingRecoverySpec extends SparkSpecBase {
     assert(got.exceptAll(want).count() === 0 &&
       want.exceptAll(got).count() === 0,
       "recovered totals differ from the batch twin")
+  }
+
+  test("tumbling totals survive a stop/restart across file batches") {
+    tumblingRecovery("recovery", Seq.empty)
+  }
+
+  test("tumbling totals survive a stop/restart under the stream keys' confs") {
+    // the FileSystem-based checkpoint manager and the state partition
+    // count every `stream_*` key runs under
+    tumblingRecovery("recovery_keys", ops.Events.streamConfs(spark))
   }
 
   test("session state survives a stop/restart and merges cross-batch runs") {

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.ParquetFileWriter
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.MessageTypeParser
@@ -55,6 +56,30 @@ class TablesSpec extends SparkSpecBase {
     val t = Tables.load(spark, dir, "t")
     assert(t.columns.toSeq === Seq("name", "w"))
     assert(t.as[(String, Double)].collect().toSeq === Seq(("x", 2.0)))
+  }
+
+  test("a file rewritten inside a table directory is read with its new schema") {
+    // two files written by parquet's example writer under fixed names;
+    // schema inference reads the first by name, so that one is rewritten,
+    // in place and longer, leaving the directory's own entry unchanged
+    val dir = tempDir()
+    def write(file: String, message: String): Unit = {
+      val schema = MessageTypeParser.parseMessageType(message)
+      val out = HadoopOutputFile.fromPath(
+        new Path(s"$dir/t.parquet/$file"), spark.sparkContext.hadoopConfiguration)
+      val w = ExampleParquetWriter.builder(out).withType(schema)
+        .withWriteMode(ParquetFileWriter.Mode.OVERWRITE).build()
+      val row = new SimpleGroupFactory(schema).newGroup().append("k", 1L)
+      if (schema.containsField("v")) row.append("v", "x")
+      try w.write(row) finally w.close()
+    }
+    write("a.parquet", "message t { required int64 k; }")
+    write("b.parquet", "message t { required int64 k; }")
+    assert(Tables.load(spark, dir, "t").columns.toSeq === Seq("k"))
+    write("a.parquet", "message t { required int64 k; required binary v (UTF8); }")
+    val t = Tables.load(spark, dir, "t")
+    assert(t.columns.toSeq === Seq("k", "v"))
+    assert(t.count() === 2)
   }
 
   test("binaryAsString is part of the cache key") {
